@@ -8,7 +8,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.streaming.{ContentStream, IndexStream, MetricStream}
+import graft.streaming.{ContentStream, GridStream, IndexStream, MetricStream}
 
 /** Long-run streaming soak with kill-recovery (VERDICT r16 task 5).
   *
@@ -17,15 +17,16 @@ import graft.streaming.{ContentStream, IndexStream, MetricStream}
   * consumer that RESTARTS (docs/user-guide.md:13 — KCL lease recovery).
   * This harness drives the three flagship stateful pipelines
   * (ContentStream.latestState, MetricStream.rollingAnomalies,
-  * IndexStream.maintain) from a REPLAYABLE file feed for hours, lets the
-  * operator kill -9 the JVM mid-run, restarts from checkpoints, and then
-  * proves the recovered outputs equal fresh batch recomputations over
-  * the full feed — exactly-once state across process death, not within
-  * one process.
+  * IndexStream.maintain) plus one sum-merge twin (GridStream.maintain,
+  * the (operation, day) grid of the envelope feed) from a REPLAYABLE
+  * file feed for hours, lets the operator kill -9 the JVM mid-run,
+  * restarts from checkpoints, and then proves the recovered outputs
+  * equal fresh batch recomputations over the full feed — exactly-once
+  * state across process death, not within one process.
   *
   * Modes:
   *   gen   <feedDir> <nFiles> <rowsPerFile>   deterministic feed files
-  *   run   <feedDir> <workDir> [triggerSec]   start/RESUME the 3 queries
+  *   run   <feedDir> <workDir> [triggerSec]   start/RESUME the 4 queries
   *   check <feedDir> <workDir>                batch-twin equality report
   *
   * Replay semantics by sink: content/metric updates append via
@@ -35,7 +36,9 @@ import graft.streaming.{ContentStream, IndexStream, MetricStream}
   * verdict rows are unique per eventId (check drops exact duplicates
   * before comparing, and counts them as evidence the kill actually
   * landed mid-batch). The index sink is the DeltaLogSink min-merge view,
-  * idempotent under replay by algebra.
+  * idempotent under replay by algebra. The grid sink is
+  * DeltaLogSink.maintain: its table is stamped with the applied batch id,
+  * so a batch replayed after a kill is skipped, not counted twice.
   */
 object Soak {
 
@@ -117,11 +120,15 @@ object Soak {
     Files.createDirectories(Paths.get(work))
     val envSchema = implicitly[org.apache.spark.sql.Encoder[ContentStream.EnvelopeRow]].schema
     val metSchema = implicitly[org.apache.spark.sql.Encoder[MetricStream.MetricEvent]].schema
+    // one feed file group per micro-batch, in name order; gen writes each
+    // group as a parquet DIRECTORY, so the listing must recurse into it
+    def files(dir: String, schema: org.apache.spark.sql.types.StructType): DataFrame =
+      spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").option("latestFirst", "false")
+        .option("recursiveFileLookup", "true").parquet(s"$feed/$dir")
 
     val contentQ = ContentStream.latestState(
-      spark.readStream.schema(envSchema)
-        .option("maxFilesPerTrigger", "1").option("latestFirst", "false")
-        .parquet(s"$feed/envelopes").as[ContentStream.EnvelopeRow])
+      files("envelopes", envSchema).as[ContentStream.EnvelopeRow])
       .writeStream.outputMode("update")
       .trigger(Trigger.ProcessingTime(s"$triggerSec seconds"))
       .option("checkpointLocation", s"$work/ckpt_content")
@@ -132,9 +139,7 @@ object Soak {
       .queryName("content").start()
 
     val metricQ = MetricStream.rollingAnomalies(
-      spark.readStream.schema(metSchema)
-        .option("maxFilesPerTrigger", "1").option("latestFirst", "false")
-        .parquet(s"$feed/metrics").as[MetricStream.MetricEvent])
+      files("metrics", metSchema).as[MetricStream.MetricEvent])
       .writeStream.outputMode("append")
       .trigger(Trigger.ProcessingTime(s"$triggerSec seconds"))
       .option("checkpointLocation", s"$work/ckpt_metric")
@@ -145,25 +150,28 @@ object Soak {
       .queryName("metric").start()
 
     val indexQ = IndexStream.maintain(
-      spark.readStream.schema(new org.apache.spark.sql.types.StructType()
-          .add("doc_id", "long").add("text", "string"))
-        .option("maxFilesPerTrigger", "1").option("latestFirst", "false")
-        .parquet(s"$feed/docs"),
+      files("docs", new org.apache.spark.sql.types.StructType()
+        .add("doc_id", "long").add("text", "string")),
       s"$work/index_table", checkpoint = Some(s"$work/ckpt_index"))
 
-    // Idle detection: the feed is exhausted when every query has run at
-    // least one data batch this PROCESS and then reports zero input for
-    // 10 consecutive polls (2.5 min — far longer than any trigger gap).
-    val queries = Seq(contentQ, metricQ, indexQ)
-    val sawData = Array(false, false, false)
-    val idle = Array(0, 0, 0)
+    val gridQ = GridStream.maintain(
+      files("envelopes", envSchema)
+        .select(col("operation").as("event_type"), to_date(col("date")).as("day")),
+      s"$work/grid_table")
+
+    // Idle detection: the feed is exhausted when every query reports zero
+    // input for 10 consecutive polls (2.5 min — far longer than any
+    // trigger gap). A query that drained its share of the feed before a
+    // kill reports zero input from its first poll after the restart.
+    val queries = Seq(contentQ, metricQ, indexQ, gridQ)
+    val idle = Array.fill(queries.size)(0)
     var done = false
     while (!done) {
       Thread.sleep(15000)
       queries.zipWithIndex.foreach { case (q, i) =>
         val p = q.lastProgress
         val rows = if (p == null) -1L else p.numInputRows
-        if (rows > 0) { sawData(i) = true; idle(i) = 0 }
+        if (rows > 0) idle(i) = 0
         else if (rows == 0) idle(i) += 1
         println(f"[soak-run] ${java.time.Instant.now} ${q.name}%-8s " +
           f"batch=${if (p == null) -1L else p.batchId} rows=$rows idle=${idle(i)}")
@@ -176,9 +184,9 @@ object Soak {
         spark.stop()
         sys.exit(2)
       }
-      done = (0 until 3).forall(i => sawData(i) && idle(i) >= 10)
+      done = idle.forall(_ >= 10)
     }
-    println("[soak-run] feed exhausted on all three queries; stopping cleanly")
+    println("[soak-run] feed exhausted on all queries; stopping cleanly")
     queries.foreach(_.stop())
     spark.stop()
   }
@@ -188,7 +196,7 @@ object Soak {
     var fails = 0
 
     // content: batch twin = global (date, seq) argmax per composite key
-    val env = spark.read.parquet(s"$feed/envelopes")
+    val env = spark.read.option("recursiveFileLookup", "true").parquet(s"$feed/envelopes")
     val w = Window.partitionBy("id", "branch", "published")
       .orderBy(desc("date"), desc("seq"))
     val wantContent = env.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
@@ -204,7 +212,7 @@ object Soak {
     fails += report(spark, "content latest-state", wantContent, gotContent)
 
     // metric: batch twin = q113's 20-preceding frame, re-derived in SQL
-    val met = spark.read.parquet(s"$feed/metrics")
+    val met = spark.read.option("recursiveFileLookup", "true").parquet(s"$feed/metrics")
       .withColumn("vm", expr("CAST(floor(value * 1000) AS BIGINT)"))
     val wf = Window.partitionBy("userId").orderBy("ts", "eventId")
       .rowsBetween(-MetricStream.FrameWidth, -1)
@@ -220,17 +228,26 @@ object Soak {
     val replayDupes = gotMetricRaw.count() -
       gotMetricRaw.dropDuplicates("eventId").count()
     println(s"[soak-check] metric replay duplicates absorbed: $replayDupes")
-    val gotMetric = gotMetricRaw.dropDuplicates("eventId")
-      .select("eventId", "userId", "eventType", "scored", "anomalous")
+    // a replayed batch re-emits identical verdicts, so distinct() absorbs
+    // it (dropDuplicates("eventId") feeding exceptAll fails to bind in
+    // Spark 4.1: INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND)
+    val gotMetric = gotMetricRaw
+      .select("eventId", "userId", "eventType", "scored", "anomalous").distinct()
     fails += report(spark, "metric rolling-anomaly", wantMetric, gotMetric)
 
     // index: min-merge view vs batch min
-    val docs = spark.read.parquet(s"$feed/docs")
+    val docs = spark.read.option("recursiveFileLookup", "true").parquet(s"$feed/docs")
     val wantIndex = graft.operators.Dedup.fpIndexFrom(docs)
     val gotIndex = IndexStream.readIndex(spark, s"$work/index_table")
     fails += report(spark, "index min-maintenance", wantIndex, gotIndex)
 
-    if (fails == 0) println("[soak-check] ALL THREE PIPELINES EQUAL BATCH TWINS")
+    // grid: sum-merge twin vs batch count per (operation, day)
+    val wantGrid = env.select(col("operation").as("event_type"), to_date(col("date")).as("day"))
+      .groupBy("event_type", "day").agg(count(lit(1)).as("n"))
+    val gotGrid = spark.read.parquet(s"$work/grid_table")
+    fails += report(spark, "grid sum-merge", wantGrid, gotGrid)
+
+    if (fails == 0) println("[soak-check] ALL FOUR PIPELINES EQUAL BATCH TWINS")
     spark.stop()
     if (fails > 0) sys.exit(1)
   }

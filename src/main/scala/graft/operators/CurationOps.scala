@@ -356,14 +356,20 @@ object CurationOps extends QueryPack {
   // sums outgrow a Long — the same plan runs with the sums cast
   // DECIMAL(38) (the q103/q117/q121 precedent). Snapshots derive as in
   // q104.
-  // The merge itself lives in streaming.StatsStream.mergeDelta, SHARED
-  // with the foreachBatch maintenance sink — so the oracle hash-match
-  // proves the exact operator the streaming pipeline applies per
-  // micro-batch (StreamingSpec seeds a table with q120OldStats, streams
-  // q120Delta, and converges to this query's result).
-  private def q120(s: SparkSession, d: String): DataFrame =
-    graft.streaming.StatsStream.mergeDelta(q120OldStats(s, d), q120Delta(s, d))
+  // The merge itself is streaming.DeltaLogSink.merge with StatsStream's
+  // keys and sums, SHARED with the streaming maintenance sink — so the
+  // oracle hash-match proves the exact operator the streaming pipeline
+  // applies per micro-batch (StreamingSpec seeds a table with
+  // q120OldStats, streams q120Delta, and converges to this query's
+  // result). A source whose docs were all removed nets to an all-zero
+  // row; the report drops it, as a direct recompute has no such source.
+  private def q120(s: SparkSession, d: String): DataFrame = {
+    import graft.streaming.{DeltaLogSink, StatsStream}
+    DeltaLogSink.merge(q120OldStats(s, d), StatsStream.asStats(q120Delta(s, d)),
+      StatsStream.keys, StatsStream.sums)
+      .filter(col("n_docs") > 0)
       .orderBy("source")
+  }
 
   private def chk120(c: org.apache.spark.sql.Column) =
     conv(substring(md5(c), 1, 8), 16, 10).cast("long")

@@ -387,9 +387,17 @@ object Dedup extends QueryPack {
     // iteration 1's count() materializes both in its own job, so the
     // loop's per-round job count is unchanged but the two
     // driver-blocking setup jobs are gone (opt guide §2.6).
-    val pairs = verifiedPairs(s, d)
-    val edges = pairs.select(col("a").as("u"), col("b").as("v"))
-      .union(pairs.select(col("b").as("u"), col("a").as("v")))
+    // Both directions of each edge come from ONE scan of the pair row:
+    // under a concurrent Caches.release() two scans of the shared pair
+    // cache can see different pair sets (likely one reading the cache,
+    // one a recomputation after it was dropped), and an edge present in one
+    // direction only leaves a doc that is never a `u` holding its
+    // neighbour's larger label, uncounted by `changed` (its `old` is
+    // null) — the cluster > doc_id result ConcurrencySpec caught.
+    val edges = verifiedPairs(s, d)
+      .select(explode(array(struct(col("a").as("u"), col("b").as("v")),
+        struct(col("b").as("u"), col("a").as("v")))).as("e"))
+      .select("e.u", "e.v")
       .localCheckpoint(eager = false)
     // The propagation loop runs ONLY over edge-touched nodes: a document
     // in no near-dup pair is its own singleton cluster by definition and

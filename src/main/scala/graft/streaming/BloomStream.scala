@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -11,23 +11,19 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * path a lakehouse bloom index (parquet bloom filters, Delta/Iceberg
   * file skipping) runs on ingest.
   *
-  * Split of responsibilities, mirroring ShardStream:
-  *  - [[mergeWords]] folds a micro-batch's per-block partial words into
-  *    the maintained `(block_id, word)` table with `bit_or`.
-  *  - [[maintain]] applies it per micro-batch through foreachBatch (the
-  *    write-then-swap parquet sink standing in for a transactional MERGE
-  *    target, as StatsStream/SaltStream/ShardStream document).
-  *  - The mask scheme is NOT reimplemented: each batch rides
-  *    `ScaleOps.bloomMaskExpr` / the `bloomWordsFrom` reduction — the
-  *    exact expressions batch q198 uses — so stream ≡ batch holds by
-  *    construction and StreamingSpec asserts word-for-word equality.
+  * [[maintain]] folds each micro-batch's per-block partial words into
+  * the maintained `(block_id, word)` table with `bit_or` through
+  * [[DeltaLogSink.maintain]]. The mask scheme is NOT reimplemented: each
+  * batch rides `ScaleOps.bloomMaskExpr` / the `bloomWordsFrom` reduction
+  * — the exact expressions batch q198 uses — so stream ≡ batch holds by
+  * construction and StreamingSpec asserts word-for-word equality.
   *
   * The OR merge is associative, commutative, AND IDEMPOTENT — strictly
-  * stronger than the sum-merges of the other maintained tables
-  * (ShardStream/StatsStream document a replayed-batch caveat; here a
-  * replayed batch re-ORs bits that are already set and the table is
-  * UNCHANGED, so at-least-once delivery needs no dedup at all — the
-  * property StreamingSpec proves by replaying a chunk mid-stream).
+  * stronger than the sum-merges of the other maintained tables: data
+  * re-delivered under a new batch id re-ORs bits that are already set
+  * and the table is UNCHANGED, so at-least-once delivery needs no dedup
+  * at all — the property StreamingSpec proves by replaying a chunk
+  * mid-stream.
   * Deletes are the known bloom limitation (bits cannot be un-set;
   * production compacts by rebuilding words for rewritten blocks).
   *
@@ -37,29 +33,12 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object BloomStream {
 
-  /** Fold per-block delta words into the maintained bloom table. */
-  def mergeWords(current: DataFrame, delta: DataFrame): DataFrame =
-    current.unionByName(delta)
-      .groupBy("block_id")
-      .agg(expr("bit_or(word)").as("word"))
-
   /** Maintain `(block_id, word)` at `table` from an order stream carrying
     * `o_orderkey` and `o_custkey`, with a FIXED block width (the
     * maintained index's layout constant; batch q198 derives its width
     * from max(o_orderkey) at audit time instead). */
   def maintain(orders: DataFrame, table: String, width: Long): StreamingQuery =
-    orders.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        val spark = batch.sparkSession
-        val delta = graft.operators.ScaleOps.bloomWordsFrom(batch.toDF(), width)
-        val current =
-          if (new java.io.File(table).exists) spark.read.parquet(table)
-          else delta.limit(0)
-        val merged = mergeWords(current, delta)
-        val tmp = table + ".tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        GridSwap.swap(tmp, table)
-        ()
-      }
-      .outputMode("update").start()
+    DeltaLogSink.maintain(orders, table, Seq("block_id"), Seq(expr("bit_or(word)").as("word"))) {
+      graft.operators.ScaleOps.bloomWordsFrom(_, width)
+    }
 }

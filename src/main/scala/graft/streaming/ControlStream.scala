@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -13,16 +13,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * exists for: the band tightens as the day's volume accumulates, and
   * the pooled center moves with the full maintained history.
   *
-  * Split of responsibilities, mirroring CusumStream/DriftStream (the
-  * sum-merge twin family):
-  *  - [[mergeDaily]] folds a micro-batch's partial (day, counts) cells
-  *    into the maintained grid — associative + commutative integer
-  *    sums, so batch order cannot change the converged grid (the
-  *    replayed-batch caveat of sum-merge twins applies; pair with an
-  *    idempotent MERGE target in production);
-  *  - [[maintain]] applies it per micro-batch through foreachBatch (the
-  *    write-then-swap parquet sink standing in for a transactional
-  *    MERGE, as the sibling twins document);
+  * A sum-merge twin ([[DeltaLogSink.maintain]]):
+  *  - the (day, counts) cells merge by associative + commutative
+  *    integer sums, so batch order cannot change the converged grid;
   *  - the statistic is NOT reimplemented: [[pchartView]] runs
   *    `SeriesOps.pchartFromDaily(grid)` — the very closing pass batch
   *    q318 executes — so stream ≡ batch holds by construction and
@@ -34,29 +27,12 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object ControlStream {
 
-  /** Fold per-day delta counts into the maintained control grid. */
-  def mergeDaily(current: DataFrame, delta: DataFrame): DataFrame =
-    current.unionByName(delta)
-      .groupBy("day")
-      .agg(sum("n_events").as("n_events"), sum("n_errors").as("n_errors"))
-
   /** Maintain `(day, n_events, n_errors)` at `table` from a raw event
     * stream carrying `ts` and `event_type`. */
   def maintain(events: DataFrame, table: String): StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        val spark = batch.sparkSession
-        val delta = graft.operators.SeriesOps.dailyControlFrom(batch.toDF())
-        val current =
-          if (new java.io.File(table).exists) spark.read.parquet(table)
-          else delta.limit(0)
-        val merged = mergeDaily(current, delta)
-        val tmp = table + ".tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        GridSwap.swap(tmp, table)
-        ()
-      }
-      .outputMode("update").start()
+    DeltaLogSink.maintain(events, table, Seq("day"),
+      Seq(sum("n_events").as("n_events"), sum("n_errors").as("n_errors")))(
+      graft.operators.SeriesOps.dailyControlFrom)
 
   /** The q318 report from the maintained grid (pure function of it). */
   def pchartView(spark: org.apache.spark.sql.SparkSession, table: String): DataFrame =

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -12,15 +12,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * actually needs ("the level shifted on day X" within one trigger of
   * the evidence arriving).
   *
-  * Split of responsibilities, mirroring ShardStream/ReplayStream:
-  *  - [[mergeDaily]] folds a micro-batch's per-(type, day) partial milli
-  *    sums into the maintained grid — a sum of integer contributions,
-  *    associative and commutative, so batch order cannot change the
-  *    converged grid (the replayed-batch caveat of the sum-merge twins
-  *    applies; pair with an idempotent MERGE target in production).
-  *  - [[maintain]] applies it per micro-batch through foreachBatch (the
-  *    write-then-swap parquet sink standing in for a transactional MERGE
-  *    target, as the sibling twins document).
+  * A sum-merge twin ([[DeltaLogSink.maintain]]):
+  *  - the per-(type, day) partial milli sums are sums of integer
+  *    contributions, associative and commutative, so batch order cannot
+  *    change the converged grid.
   *  - The statistic is NOT reimplemented: run
   *    `ScaleOps.cusumFromDaily(maintained grid)` — the very closing pass
   *    batch q206 executes — so stream ≡ batch holds by construction and
@@ -32,27 +27,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object CusumStream {
 
-  /** Fold per-(type, day) delta sums into the maintained daily grid. */
-  def mergeDaily(current: DataFrame, delta: DataFrame): DataFrame =
-    current.unionByName(delta)
-      .groupBy("event_type", "day")
-      .agg(sum("sv").as("sv"))
-
   /** Maintain `(event_type, day, sv)` at `table` from a raw event stream
     * carrying `ts`, `event_type`, `value`. */
   def maintain(events: DataFrame, table: String): StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        val spark = batch.sparkSession
-        val delta = graft.operators.ScaleOps.dailyGridFrom(batch.toDF())
-        val current =
-          if (new java.io.File(table).exists) spark.read.parquet(table)
-          else delta.limit(0)
-        val merged = mergeDaily(current, delta)
-        val tmp = table + ".tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        GridSwap.swap(tmp, table)
-        ()
-      }
-      .outputMode("update").start()
+    DeltaLogSink.maintain(events, table, Seq("event_type", "day"), Seq(sum("sv").as("sv")))(
+      graft.operators.ScaleOps.dailyGridFrom)
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -14,16 +14,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * drifted over the corpus"; the twin answers it continuously as the
   * corpus grows.
   *
-  * Same split of responsibilities as [[CusumStream]] (the sum-merge twin
-  * family):
-  *  - [[mergeCells]] folds a micro-batch's partial (source, oct) counts
-  *    into the maintained grid — associative + commutative integer sums,
-  *    so batch order cannot change the converged grid (the replayed-
-  *    batch caveat of sum-merge twins applies; pair with an idempotent
-  *    MERGE target in production).
-  *  - [[maintain]] applies it per micro-batch through foreachBatch (the
-  *    write-then-swap parquet sink standing in for a transactional
-  *    MERGE, as the sibling twins document).
+  * A sum-merge twin ([[DeltaLogSink.maintain]]), like [[CusumStream]]:
+  *  - the partial (source, oct) counts merge by associative +
+  *    commutative integer sums, so batch order cannot change the
+  *    converged grid.
   *  - The statistic is NOT reimplemented: the read view runs
   *    `AuditOps.psiFromCells(grid)` — the very closing pass batch q248
   *    executes — so stream ≡ batch holds by construction and the spec
@@ -35,29 +29,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object DriftStream {
 
-  /** Fold per-(source, oct) delta counts into the maintained grid. */
-  def mergeCells(current: DataFrame, delta: DataFrame): DataFrame =
-    current.unionByName(delta)
-      .groupBy("source", "oct")
-      .agg(sum("c").as("c"))
-
   /** Maintain the (source, oct, c) grid at `table` from a document
     * stream carrying `source` and `n_chars`. */
   def maintain(docs: DataFrame, table: String): StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        val spark = batch.sparkSession
-        val delta = graft.operators.AuditOps.octaveCellsFrom(batch.toDF())
-        val current =
-          if (new java.io.File(table).exists) spark.read.parquet(table)
-          else delta.limit(0)
-        val merged = mergeCells(current, delta)
-        val tmp = table + ".tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        GridSwap.swap(tmp, table)
-        ()
-      }
-      .outputMode("update").start()
+    DeltaLogSink.maintain(docs, table, Seq("source", "oct"), Seq(sum("c").as("c")))(
+      graft.operators.AuditOps.octaveCellsFrom)
 
   /** The q248 report from the maintained grid (pure function of it). */
   def psiView(spark: org.apache.spark.sql.SparkSession, table: String): DataFrame =

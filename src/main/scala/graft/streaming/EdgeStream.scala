@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, StreamingQuery,
   TimeMode, TimerValues, TTLConfig, ValueState}
@@ -19,10 +19,9 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, StreamingQ
   *    key, no timeline buffer, with an optional TTL so dormant users
   *    fall out of the store at corpus scale.
   *  - [[maintain]] folds per-batch hop counts into the maintained
-  *    (src, dst, ew) table via the foreachBatch merge sink (the
-  *    StatsStream write-then-swap parquet stand-in for a Delta/Iceberg
-  *    MERGE). Counts are associative sums, so micro-batch application
-  *    order cannot change the result.
+  *    (src, dst, ew) table ([[DeltaLogSink.maintain]]). Counts are
+  *    associative sums, so micro-batch application order cannot change
+  *    the result.
   *
   * Precondition (same in-order contract as the A12/A16 sequencing ops):
   * each user's events arrive in event-time order across micro-batches;
@@ -79,27 +78,10 @@ object EdgeStream {
       .transformWithState(new TransitionsProcessor(ttl), timeMode, OutputMode.Append())
   }
 
-  /** Maintain the (src, dst, ew) edge-count table from a hop stream. The
-    * checkpoint lives next to the maintained table (explicit location:
-    * survives stop, resumable — and a temporary checkpoint would be
-    * deleted at stop while a commit can still be in flight). */
+  /** Maintain the (src, dst, ew) edge-count table from a hop stream:
+    * each hop adds 1 to its edge. */
   def maintain(hops: DataFrame, table: String): StreamingQuery =
-    hops.writeStream
-      .option("checkpointLocation", table + ".ckpt")
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        val spark = batch.sparkSession
-        val delta = batch.groupBy("src", "dst").agg(count(lit(1)).as("ew"))
-        val current =
-          if (new java.io.File(table).exists) spark.read.parquet(table)
-          else delta.limit(0)
-        val merged = current.unionByName(delta)
-          .groupBy("src", "dst").agg(sum("ew").as("ew"))
-        val tmp = table + ".tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        GridSwap.swap(tmp, table)
-        ()
-      }
-      // append: matches the Append-mode transformWithState upstream —
-      // correct here anyway, since each hop is emitted exactly once
-      .outputMode("append").start()
+    DeltaLogSink.maintain(hops, table, Seq("src", "dst"), Seq(sum("ew").as("ew"))) {
+      _.select(col("src"), col("dst"), lit(1L).as("ew"))
+    }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -13,14 +13,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * (Roberts 1959 built it for sequential monitoring), so the twin is
   * the deployment posture, not a demo.
   *
-  * Same split as ControlStream/CusumStream (the sum-merge twin family):
-  *  - [[mergeDaily]] folds a micro-batch's partial (type, day) counts
-  *    into the maintained grid — associative + commutative sums, so
-  *    batch order cannot change the converged grid (replayed-batch
-  *    caveat applies; pair with an idempotent MERGE target in
-  *    production);
-  *  - [[maintain]] applies it per micro-batch via foreachBatch with the
-  *    write-then-swap parquet sink the sibling twins document;
+  * A sum-merge twin ([[DeltaLogSink.maintain]]), like ControlStream:
+  *  - the partial (type, day) counts merge by associative +
+  *    commutative sums, so batch order cannot change the converged
+  *    grid; HoltStream maintains the same grid through [[maintain]];
   *  - the statistic is NOT reimplemented: [[ewmaView]] runs
   *    `SeriesOps.ewmaFromDaily(grid)` — the very closing pass batch
   *    q343 executes — so stream ≡ batch holds by construction and
@@ -32,29 +28,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object EwmaStream {
 
-  /** Fold per-(type, day) delta counts into the maintained grid. */
-  def mergeDaily(current: DataFrame, delta: DataFrame): DataFrame =
-    current.unionByName(delta)
-      .groupBy("event_type", "day")
-      .agg(sum("c").as("c"))
-
   /** Maintain `(event_type, day, c)` at `table` from a raw event stream
     * carrying `ts` and `event_type`. */
   def maintain(events: DataFrame, table: String): StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        val spark = batch.sparkSession
-        val delta = graft.operators.SeriesOps.typeDailyFrom(batch.toDF())
-        val current =
-          if (new java.io.File(table).exists) spark.read.parquet(table)
-          else delta.limit(0)
-        val merged = mergeDaily(current, delta)
-        val tmp = table + ".tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        GridSwap.swap(tmp, table)
-        ()
-      }
-      .outputMode("update").start()
+    DeltaLogSink.maintain(events, table, Seq("event_type", "day"), Seq(sum("c").as("c")))(
+      graft.operators.SeriesOps.typeDailyFrom)
 
   /** The q343 chart from the maintained grid (pure function of it). */
   def ewmaView(spark: org.apache.spark.sql.SparkSession, table: String): DataFrame =

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -20,27 +20,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object GridStream {
 
-  /** Fold a micro-batch's per-(feed, day) partial counts into the grid. */
-  def mergeGrid(current: DataFrame, delta: DataFrame): DataFrame =
-    current.unionByName(delta)
-      .groupBy("event_type", "day").agg(sum("n").as("n"))
-
-  /** Maintain the grid at `table` from a raw (event_type, day) stream.
-    * Additive-count state: pair with an idempotent table format in
-    * production (the StatsStream caveat). */
+  /** Maintain the grid at `table` from a raw (event_type, day) stream
+    * through [[DeltaLogSink.maintain]]: each event adds 1 to its cell. */
   def maintain(events: DataFrame, table: String): StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        val spark = batch.sparkSession
-        val delta = batch.groupBy("event_type", "day").agg(count(lit(1)).as("n"))
-        val current =
-          if (new java.io.File(table).exists) spark.read.parquet(table)
-          else delta.limit(0)
-        val merged = mergeGrid(current, delta)
-        val tmp = table + ".tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        GridSwap.swap(tmp, table)
-        ()
-      }
-      .outputMode("update").start()
+    DeltaLogSink.maintain(events, table, Seq("event_type", "day"), Seq(sum("n").as("n"))) {
+      _.select(col("event_type"), col("day"), lit(1L).as("n"))
+    }
 }

@@ -1,31 +1,77 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.io.{File, IOException}
+import java.nio.file.{AtomicMoveNotSupportedException, Files, Path, Paths, StandardCopyOption}
 
-/** The publish step shared by every sum-merge streaming twin: the
-  * micro-batch writes the merged grid to `<table>.tmp`, then the live
-  * `<table>` directory is swapped to it. Previously each twin did
-  * `deleteDirectory(live); tmp.renameTo(live)` and IGNORED renameTo's
-  * boolean — if the rename failed after the delete, the maintained grid
-  * was silently lost and the next micro-batch restarted from empty,
-  * breaking stream==batch with no error (r15 ADVICE). `Files.move`
-  * throws on failure, so a lost grid is now a loud foreachBatch error
-  * that fails the StreamingQuery instead of a silent reset.
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.DataFrame
+
+/** How a maintained table is published — the one module that knows it
+  * ([[DeltaLogSink.maintain]] is its only streaming caller).
   *
-  * ATOMIC_MOVE is attempted first (same filesystem: one rename syscall,
-  * readers never observe a missing table); if the filesystem refuses
-  * atomic directory moves, plain move still throws on failure.
+  * A batch writes the new table to `<table>.tmp` and stamps it with an
+  * empty `_applied.<batchId>` file; the stamp is created last, so a tmp
+  * is complete exactly when it carries one. [[swap]] then moves the
+  * live directory aside to `<table>.old`, moves tmp to live, and drops
+  * `.old`: the live table is never deleted before its replacement is in
+  * place. Each move is one directory rename (ATOMIC_MOVE where the
+  * filesystem allows it; a plain move still throws on failure), and a
+  * failed move restores `.old`, so a swap that cannot complete throws
+  * with the previous table still live.
+  *
+  * A process death can stop the sequence between any two steps;
+  * [[recover]], run at the start of every batch, finishes or undoes it.
+  * The stamp lives inside the table because Spark's file listing skips
+  * `_`-prefixed names, so views keep reading `spark.read.parquet(table)`.
   */
 object GridSwap {
-  def swap(tmp: String, table: String): Unit = {
-    val live = new java.io.File(table)
-    if (live.exists) org.apache.commons.io.FileUtils.deleteDirectory(live)
-    try
-      Files.move(Paths.get(tmp), Paths.get(table), StandardCopyOption.ATOMIC_MOVE)
-    catch {
-      case _: java.nio.file.AtomicMoveNotSupportedException =>
-        Files.move(Paths.get(tmp), Paths.get(table))
-    }
-    ()
+
+  private val Stamp = "_applied."
+
+  /** Write `grid` as the next version of `table`, stamped `batchId`. */
+  def publish(grid: DataFrame, table: String, batchId: Long): Unit = {
+    val tmp = table + ".tmp"
+    grid.write.mode("overwrite").parquet(tmp)
+    Files.createFile(Paths.get(tmp, Stamp + batchId))
+    swap(tmp, table)
   }
+
+  def swap(tmp: String, table: String): Unit = {
+    val (live, old) = (Paths.get(table), Paths.get(table + ".old"))
+    if (Files.exists(live)) move(live, old)
+    try move(Paths.get(tmp), live)
+    catch {
+      case e: IOException =>
+        if (Files.exists(old)) move(old, live)
+        throw e
+    }
+    FileUtils.deleteDirectory(old.toFile)
+  }
+
+  /** Bring `table` back to a published state after an interrupted
+    * [[publish]]: a complete tmp replaces a missing live table, else
+    * `.old` does; leftover tmp and `.old` are dropped. Returns the batch
+    * id the live table was stamped with (-1 for a table written outside
+    * this sink), or None when there is no table yet. */
+  def recover(table: String): Option[Long] = {
+    val (live, old, tmp) =
+      (new File(table), new File(table + ".old"), new File(table + ".tmp"))
+    if (!live.exists) {
+      if (stamp(tmp).isDefined) move(tmp.toPath, live.toPath)
+      else if (old.exists) move(old.toPath, live.toPath)
+    }
+    FileUtils.deleteDirectory(tmp)
+    FileUtils.deleteDirectory(old)
+    if (live.exists) Some(stamp(live).getOrElse(-1L)) else None
+  }
+
+  private def stamp(dir: File): Option[Long] =
+    Option(dir.list()).toSeq.flatten
+      .collectFirst { case n if n.startsWith(Stamp) => n.stripPrefix(Stamp).toLong }
+
+  private def move(from: Path, to: Path): Unit =
+    try Files.move(from, to, StandardCopyOption.ATOMIC_MOVE)
+    catch {
+      case _: AtomicMoveNotSupportedException => Files.move(from, to)
+    }
 }

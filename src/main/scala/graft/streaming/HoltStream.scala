@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming twin of the Holt linear-trend backtest (q348 / SURVEY B309)
@@ -19,9 +18,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * the order-dependent Holt fold reruns per refresh on the bounded grid
   * (types × days: metadata-sized at any corpus scale).
   *
-  *  - [[mergeDaily]] folds a micro-batch's partial counts into the grid;
-  *  - [[maintain]] applies it per micro-batch via foreachBatch with the
-  *    write-then-swap parquet sink the sibling twins document;
+  *  - [[maintain]] keeps the very grid [[EwmaStream.maintain]] keeps;
   *  - [[holtView]] runs `SeriesOps.holtFromDaily(grid)` — the very
   *    closing pass batch q348 executes (all-integer truncating steps),
   *    so StreamingSpec asserts full-corpus row equality.
@@ -31,29 +28,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object HoltStream {
 
-  /** Fold per-(type, day) delta counts into the maintained grid. */
-  def mergeDaily(current: DataFrame, delta: DataFrame): DataFrame =
-    current.unionByName(delta)
-      .groupBy("event_type", "day")
-      .agg(sum("c").as("c"))
-
   /** Maintain `(event_type, day, c)` at `table` from a raw event stream
     * carrying `ts` and `event_type`. */
   def maintain(events: DataFrame, table: String): StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        val spark = batch.sparkSession
-        val delta = graft.operators.SeriesOps.typeDailyFrom(batch.toDF())
-        val current =
-          if (new java.io.File(table).exists) spark.read.parquet(table)
-          else delta.limit(0)
-        val merged = mergeDaily(current, delta)
-        val tmp = table + ".tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        GridSwap.swap(tmp, table)
-        ()
-      }
-      .outputMode("update").start()
+    EwmaStream.maintain(events, table)
 
   /** The q348 backtest from the maintained grid (pure function of it). */
   def holtView(spark: org.apache.spark.sql.SparkSession, table: String): DataFrame =

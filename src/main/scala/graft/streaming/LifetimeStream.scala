@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -11,9 +11,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * matter and the maintained table equals the batch aggregation exactly
   * once the same events have flowed through.
   *
-  * Mirrors SaltStream/StatsStream: [[mergeLifetimes]] is the maintenance
-  * operator, [[maintain]] the foreachBatch write-then-swap sink, and the
-  * hazard itself is NOT reimplemented — run
+  * Mirrors SaltStream/StatsStream: [[maintain]] is the min/max merge
+  * ([[DeltaLogSink.maintain]]), and the hazard itself is NOT
+  * reimplemented — run
   * `StreamSemantics.hazardFromLifetimes(maintained table)`, the very
   * function batch q147 executes, so stream ≡ batch by construction
   * (asserted exactly in StreamingSpec).
@@ -25,28 +25,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object LifetimeStream {
 
-  /** Fold a micro-batch's per-user (f, l) partials into the table. */
-  def mergeLifetimes(current: DataFrame, delta: DataFrame): DataFrame =
-    current.unionByName(delta)
-      .groupBy("user_id").agg(min("f").as("f"), max("l").as("l"))
-
   /** Maintain `(user_id, f, l)` at `table` from a raw `(user_id, day)`
-    * stream. Batch-level idempotency: min/max re-merge safely even if a
-    * batch replays (unlike additive counts — no transactional sink
-    * needed for correctness here). */
+    * stream: each event is a one-day lifetime. */
   def maintain(events: DataFrame, table: String): StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        val spark = batch.sparkSession
-        val delta = batch.groupBy("user_id").agg(min("day").as("f"), max("day").as("l"))
-        val current =
-          if (new java.io.File(table).exists) spark.read.parquet(table)
-          else delta.limit(0)
-        val merged = mergeLifetimes(current, delta)
-        val tmp = table + ".tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        GridSwap.swap(tmp, table)
-        ()
-      }
-      .outputMode("update").start()
+    DeltaLogSink.maintain(events, table, Seq("user_id"),
+      Seq(min("f").as("f"), max("l").as("l"))) {
+      _.select(col("user_id"), col("day").as("f"), col("day").as("l"))
+    }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -22,10 +22,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * state 0). The price of self-inverse merging is that it is NOT
   * idempotent — a replayed (non-deterministically re-emitted) batch
   * would cancel its own rows — so the sink must be effectively-once at
-  * the batch grain: the maintained grid is rewritten per epoch via the
-  * write-then-swap below (a transactional MERGE target in production),
-  * and the upstream source must replay the SAME rows for the same epoch
-  * (Kinesis sequence-number ranges give exactly that).
+  * the batch grain: [[DeltaLogSink.maintain]] skips a batch id the
+  * table is already stamped with, and the upstream source must replay
+  * the SAME rows for the same epoch (Kinesis sequence-number ranges
+  * give exactly that).
   *
   * 100 TB shape: per micro-batch the row hashing is scan-local, the
   * partial XOR collapses map-side to ≤ 64 rows before any exchange, and
@@ -34,30 +34,13 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object MerkleStream {
 
-  /** XOR-fold a micro-batch's leaf deltas into the maintained digests.
+  /** Maintain the 64 leaf digests at `table` from a document stream
+    * carrying `doc_id`, `text`, XOR-folding each batch's leaf deltas in.
     * Leaves whose digest returns to 0 are kept (0 IS the empty-state
     * digest — dropping the row would be indistinguishable from a
     * never-written leaf, which is exactly what an anti-entropy diff
     * must be able to distinguish from "diverged to empty"). */
-  def mergeLeaves(current: DataFrame, delta: DataFrame): DataFrame =
-    current.unionByName(delta)
-      .groupBy("leaf").agg(expr("bit_xor(hl)").as("hl"))
-
-  /** Maintain the 64 leaf digests at `table` from a document stream
-    * carrying `doc_id`, `text`. */
   def maintain(docs: DataFrame, table: String): StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        val spark = batch.sparkSession
-        val delta = graft.operators.AuditOps.merkleLeaves(batch.toDF())
-        val current =
-          if (new java.io.File(table).exists) spark.read.parquet(table)
-          else delta.limit(0)
-        val merged = mergeLeaves(current, delta)
-        val tmp = table + ".tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        GridSwap.swap(tmp, table)
-        ()
-      }
-      .outputMode("update").start()
+    DeltaLogSink.maintain(docs, table, Seq("leaf"), Seq(expr("bit_xor(hl)").as("hl")))(
+      graft.operators.AuditOps.merkleLeaves)
 }

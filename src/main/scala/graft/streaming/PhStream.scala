@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -12,10 +12,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * every micro-batch, alarms readable as soon as a sustained break
   * accumulates.
   *
-  * Same split as ControlStream/EwmaStream (sum-merge twin family):
-  * [[mergeDaily]] folds micro-batch partials by associative sums,
-  * [[maintain]] applies per batch via foreachBatch with the
-  * write-then-swap parquet sink, and [[phView]] runs
+  * A sum-merge twin ([[DeltaLogSink.maintain]]), like ControlStream:
+  * micro-batch partials merge by associative sums, and [[phView]] runs
   * `SeriesOps.phFromDaily(grid)` — the very closing pass batch q339
   * executes — so stream ≡ batch holds by construction (StreamingSpec
   * asserts full-corpus equality).
@@ -25,29 +23,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object PhStream {
 
-  /** Fold per-day delta counts into the maintained grid. */
-  def mergeDaily(current: DataFrame, delta: DataFrame): DataFrame =
-    current.unionByName(delta)
-      .groupBy("day")
-      .agg(sum("n").as("n"), sum("e").as("e"))
-
   /** Maintain `(day, n, e)` at `table` from a raw event stream carrying
     * `ts` and `event_type`. */
   def maintain(events: DataFrame, table: String): StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        val spark = batch.sparkSession
-        val delta = graft.operators.SeriesOps.dailyErrorFrom(batch.toDF())
-        val current =
-          if (new java.io.File(table).exists) spark.read.parquet(table)
-          else delta.limit(0)
-        val merged = mergeDaily(current, delta)
-        val tmp = table + ".tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        GridSwap.swap(tmp, table)
-        ()
-      }
-      .outputMode("update").start()
+    DeltaLogSink.maintain(events, table, Seq("day"), Seq(sum("n").as("n"), sum("e").as("e")))(
+      graft.operators.SeriesOps.dailyErrorFrom)
 
   /** The q339 report from the maintained grid (pure function of it). */
   def phView(spark: org.apache.spark.sql.SparkSession, table: String): DataFrame =

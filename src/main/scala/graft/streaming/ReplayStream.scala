@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -13,14 +13,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * day axis.
   *
   * Split of responsibilities, mirroring ShardStream:
-  *  - [[mergeGrid]] folds a micro-batch's partial (count, min seq, max
-  *    seq) per (shard, day) into the maintained grid. Count is a sum of
-  *    non-negatives, the seq bounds are min/max — all three merges are
-  *    associative and commutative, so batch order cannot change the
-  *    converged grid.
-  *  - [[maintain]] applies it per micro-batch through foreachBatch (the
-  *    write-then-swap parquet sink standing in for a transactional MERGE
-  *    target, as StatsStream/SaltStream/ShardStream document).
+  *  - [[maintain]] folds each micro-batch's (count, min seq, max seq)
+  *    per (shard, day) into the maintained grid
+  *    ([[DeltaLogSink.maintain]]). Count is a sum of non-negatives, the
+  *    seq bounds are min/max — all three merges are associative and
+  *    commutative, so batch order cannot change the converged grid.
   *  - The audit itself is NOT reimplemented: run
   *    `ContentOps.amplificationFrom(maintained grid, archive base)` — the
   *    very closing pass batch q192 executes — so stream ≡ batch holds by
@@ -34,33 +31,13 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object ReplayStream {
 
-  /** Fold a micro-batch's partial grid into the maintained grid. */
-  def mergeGrid(current: DataFrame, delta: DataFrame): DataFrame =
-    current.unionByName(delta)
-      .groupBy("shard", "day")
-      .agg(sum("window_ops").as("window_ops"),
-        min("seq_lo").as("seq_lo"), max("seq_hi").as("seq_hi"))
-
   /** Maintain the (shard, day, window_ops, seq_lo, seq_hi) grid at
-    * `table` from a wire stream carrying `shard, seq, date`. Batch-level
-    * idempotency caveat as ShardStream: a replayed batch re-merges its
-    * rows — pair with an idempotent table format in production. */
+    * `table` from a wire stream carrying `shard, seq, date`. */
   def maintain(ops: DataFrame, table: String): StreamingQuery =
-    ops.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        val spark = batch.sparkSession
-        val delta = graft.contentops.ContentOps.replayBase(batch)
-          .groupBy("shard", "day")
-          .agg(count(lit(1)).as("window_ops"),
-            min("seqn").as("seq_lo"), max("seqn").as("seq_hi"))
-        val current =
-          if (new java.io.File(table).exists) spark.read.parquet(table)
-          else delta.limit(0)
-        val merged = mergeGrid(current, delta)
-        val tmp = table + ".tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        GridSwap.swap(tmp, table)
-        ()
-      }
-      .outputMode("update").start()
+    DeltaLogSink.maintain(ops, table, Seq("shard", "day"),
+      Seq(sum("window_ops").as("window_ops"), min("seq_lo").as("seq_lo"),
+        max("seq_hi").as("seq_hi"))) {
+      graft.contentops.ContentOps.replayBase(_).select(col("shard"), col("day"),
+        lit(1L).as("window_ops"), col("seqn").as("seq_lo"), col("seqn").as("seq_hi"))
+    }
 }

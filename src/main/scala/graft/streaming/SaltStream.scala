@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -11,13 +11,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * being protected runs hourly over an unbounded feed.
   *
   * Split of responsibilities, mirroring StatsStream:
-  *  - [[mergeCounts]] is the maintenance operator: fold a micro-batch's
-  *    per-key partial counts into the maintained `(user_id, freq)` table.
+  *  - [[maintain]] folds each micro-batch's per-key counts into the
+  *    maintained `(user_id, freq)` table ([[DeltaLogSink.maintain]]).
   *    Counts are sums of non-negative contributions, so the merge is
   *    associative and per-batch application order cannot matter.
-  *  - [[maintain]] applies it per micro-batch through foreachBatch (the
-  *    same write-then-swap parquet sink as StatsStream — standing in for
-  *    a transactional MERGE target in production).
   *  - The plan itself is NOT reimplemented: run
   *    `ScaleOps.saltPlanFromCounts(maintained table)` — the very function
   *    batch q138 executes — so stream ≡ batch holds by construction, and
@@ -30,28 +27,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object SaltStream {
 
-  /** Fold per-key delta counts into the maintained count table. */
-  def mergeCounts(current: DataFrame, delta: DataFrame): DataFrame =
-    current.unionByName(delta)
-      .groupBy("user_id").agg(sum("freq").as("freq"))
-
-  /** Maintain `(user_id, freq)` at `table` from a raw event stream.
-    * Batch-level idempotency caveat as StatsStream: a replayed batch
-    * re-merges its rows — pair with an idempotent table format in
-    * production. */
+  /** Maintain `(user_id, freq)` at `table` from a raw event stream. */
   def maintain(events: DataFrame, table: String): StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        val spark = batch.sparkSession
-        val delta = batch.groupBy("user_id").agg(count(lit(1)).as("freq"))
-        val current =
-          if (new java.io.File(table).exists) spark.read.parquet(table)
-          else delta.limit(0)
-        val merged = mergeCounts(current, delta)
-        val tmp = table + ".tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        GridSwap.swap(tmp, table)
-        ()
-      }
-      .outputMode("update").start()
+    DeltaLogSink.maintain(events, table, Seq("user_id"), Seq(sum("freq").as("freq"))) {
+      _.select(col("user_id"), lit(1L).as("freq"))
+    }
 }

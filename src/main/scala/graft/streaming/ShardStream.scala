@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -11,14 +11,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * a Kinesis consumer group actually performs when it rebalances.
   *
   * Split of responsibilities, mirroring SaltStream:
-  *  - [[mergeLoads]] folds a micro-batch's per-shard partial counts and
-  *    byte loads into the maintained `(shard, n_events, load)` table.
-  *    Both columns are sums of non-negative contributions: the merge is
-  *    associative and commutative, so batch application order cannot
-  *    change the converged table.
-  *  - [[maintain]] applies it per micro-batch through foreachBatch (the
-  *    write-then-swap parquet sink standing in for a transactional MERGE
-  *    target, as StatsStream/SaltStream document).
+  *  - [[maintain]] folds each micro-batch's per-shard counts and byte
+  *    loads into the maintained `(shard, n_events, load)` table
+  *    ([[DeltaLogSink.maintain]]). Both columns are sums of non-negative
+  *    contributions: the merge is associative and commutative, so batch
+  *    application order cannot change the converged table.
   *  - The plan itself is NOT reimplemented: run
   *    `ScaleOps.rebalanceFromLoads(maintained table)` — the very function
   *    batch q175 executes — so stream ≡ batch holds by construction and
@@ -31,32 +28,12 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object ShardStream {
 
-  /** Fold per-shard delta loads into the maintained load table. */
-  def mergeLoads(current: DataFrame, delta: DataFrame): DataFrame =
-    current.unionByName(delta)
-      .groupBy("shard")
-      .agg(sum("n_events").as("n_events"), sum("load").as("load"))
-
   /** Maintain `(shard, n_events, load)` at `table` from a raw event
-    * stream carrying `user_id` and `props`. Batch-level idempotency
-    * caveat as SaltStream: a replayed batch re-merges its rows — pair
-    * with an idempotent table format in production. */
+    * stream carrying `user_id` and `props`. */
   def maintain(events: DataFrame, table: String): StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        val spark = batch.sparkSession
-        val delta = batch
-          .withColumn("shard", col("user_id") % 32)
-          .groupBy("shard")
-          .agg(count(lit(1)).as("n_events"), sum(length(col("props"))).as("load"))
-        val current =
-          if (new java.io.File(table).exists) spark.read.parquet(table)
-          else delta.limit(0)
-        val merged = mergeLoads(current, delta)
-        val tmp = table + ".tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        GridSwap.swap(tmp, table)
-        ()
-      }
-      .outputMode("update").start()
+    DeltaLogSink.maintain(events, table, Seq("shard"),
+      Seq(sum("n_events").as("n_events"), sum("load").as("load"))) {
+      _.select((col("user_id") % 32).as("shard"), lit(1L).as("n_events"),
+        length(col("props")).cast("long").as("load"))
+    }
 }

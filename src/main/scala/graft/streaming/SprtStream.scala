@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -21,34 +21,15 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *
   * 100 TB shape: each micro-batch shuffles only its own (type, day)
   * partial sums; the maintained state is the bounded type × day grid,
-  * and the closing pass runs entirely on it. Same write-then-swap sink
-  * discipline as CusumStream (a transactional MERGE target in
-  * production; the sum-merge twins' replayed-batch caveat applies).
+  * and the closing pass runs entirely on it. A sum-merge twin
+  * ([[DeltaLogSink.maintain]]), like CusumStream.
   */
 object SprtStream {
-
-  /** Fold a micro-batch's per-(type, day) partial trial counts into the
-    * maintained grid. */
-  def mergeDaily(current: DataFrame, delta: DataFrame): DataFrame =
-    current.unionByName(delta)
-      .groupBy("event_type", "day")
-      .agg(sum("n_d").as("n_d"), sum("x_d").as("x_d"))
 
   /** Maintain `(event_type, day, n_d, x_d)` at `table` from a raw event
     * stream carrying `ts`, `event_type`, `value`. */
   def maintain(events: DataFrame, table: String): StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        val spark = batch.sparkSession
-        val delta = graft.operators.AuditOps.sprtDailyFrom(batch.toDF())
-        val current =
-          if (new java.io.File(table).exists) spark.read.parquet(table)
-          else delta.limit(0)
-        val merged = mergeDaily(current, delta)
-        val tmp = table + ".tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        GridSwap.swap(tmp, table)
-        ()
-      }
-      .outputMode("update").start()
+    DeltaLogSink.maintain(events, table, Seq("event_type", "day"),
+      Seq(sum("n_d").as("n_d"), sum("x_d").as("x_d")))(
+      graft.operators.AuditOps.sprtDailyFrom)
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -9,31 +9,30 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * folding SIGNED delta contribution rows into a maintained stats
   * table, never rescanning the old corpus.
   *
-  * [[mergeDelta]] is the maintenance operator itself, shared by both
-  * forms: batch q120 IS mergeDelta(old snapshot's aggregates, snapshot
-  * diff) — so the driver's oracle hash-match (the oracle recomputes
-  * directly from the new snapshot) proves THIS operator equals a full
-  * recompute — and [[maintain]] is the production sink that applies the
-  * same operator per micro-batch through foreachBatch (the r5 MERGE
-  * upsert sink, SourceSinkSpec, pointed at stats instead of state).
-  * StreamingSpec proves the chain: seed the table with the old
-  * snapshot's aggregates, stream the delta rows in micro-batches, and
-  * the final table equals batch q120 exactly (integer-exact stats, so
-  * equality is exact, not approximate).
+  * The maintenance operator is [[DeltaLogSink.merge]] with [[keys]] and
+  * [[sums]], shared by both forms: batch q120 IS that merge of the old
+  * snapshot's aggregates with the snapshot diff — so the q120 oracle
+  * hash-match (the oracle recomputes directly from the new snapshot)
+  * proves THIS operator equals a full recompute — and [[maintain]]
+  * applies the same merge per micro-batch ([[DeltaLogSink.maintain]]).
+  * A delta row is a stats row: [[asStats]] renames each signed
+  * contribution to the column it sums into, so table and delta share
+  * one schema. StreamingSpec proves the chain: seed the table with the
+  * old snapshot's aggregates, stream the delta rows in micro-batches,
+  * and the final table equals batch q120 exactly (integer-exact stats,
+  * so equality is exact, not approximate).
   *
   * Precondition (same as any IVM scheme): the delta feed is consistent
   * with the seeded snapshot — a remove/change row only arrives for a
   * doc whose contribution is already in the table. Under that
-  * contract a source whose docs are all removed nets EXACTLY to zero
-  * (removals are negations of prior contributions), so the
-  * `n_docs > 0` drop in [[mergeDelta]] never discards partial sums.
+  * contract a source whose docs are all removed nets EXACTLY to an
+  * all-zero row (removals are negations of prior contributions); the
+  * table keeps that row and q120's report drops it (`n_docs > 0`).
   *
   * 100 TB shape: the maintained table is (sources × 3 longs) —
   * metadata-sized — while each micro-batch's work is one partial
   * aggregation of the (tiny) delta plus a union with the current
-  * table. The write-then-swap parquet sink here stands in for the
-  * transactional table (Delta/Iceberg MERGE) a cluster deployment
-  * would target; the merge arithmetic is identical.
+  * table.
   */
 object StatsStream {
 
@@ -41,38 +40,19 @@ object StatsStream {
     * `did` = signed doc-id mass, `dchk` = signed content-checksum mass. */
   case class DeltaRow(source: String, dn: Long, did: Long, dchk: Long)
 
-  /** Fold signed delta contributions into the maintained per-source
-    * stats `(source, n_docs, id_sum, content_checksum)`. Associative in
-    * the delta argument (sums of signed contributions), which is what
-    * makes per-micro-batch application order-insensitive. */
-  def mergeDelta(current: DataFrame, delta: DataFrame): DataFrame =
-    current
-      .select(col("source"), col("n_docs").as("dn"), col("id_sum").as("did"),
-        col("content_checksum").as("dchk"))
-      .unionByName(delta.select("source", "dn", "did", "dchk"))
-      .groupBy("source")
-      .agg(sum("dn").as("n_docs"), sum("did").as("id_sum"),
-        sum("dchk").as("content_checksum"))
-      .filter(col("n_docs") > 0)
+  /** The maintained per-source stats `(source, n_docs, id_sum,
+    * content_checksum)`: sums of signed contributions, associative in
+    * the delta, which makes per-micro-batch application order-insensitive. */
+  private[graft] val keys = Seq("source")
+  private[graft] val sums =
+    Seq(sum("n_docs").as("n_docs"), sum("id_sum").as("id_sum"),
+      sum("content_checksum").as("content_checksum"))
 
-  /** Maintain the stats table at `table` (parquet, write-then-swap)
-    * from a stream of [[DeltaRow]]s. Idempotent only at the batch
-    * level Spark already guarantees (a replayed batch re-merges the
-    * same rows — pair with an idempotent table format in production;
-    * see the transactional-batch-id test in SourceSinkSpec). */
+  private[graft] def asStats(deltas: DataFrame): DataFrame =
+    deltas.select(col("source"), col("dn").as("n_docs"), col("did").as("id_sum"),
+      col("dchk").as("content_checksum"))
+
+  /** Maintain the stats table at `table` from a stream of [[DeltaRow]]s. */
   def maintain(deltas: DataFrame, table: String): StreamingQuery =
-    deltas.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        val spark = batch.sparkSession
-        val current =
-          if (new java.io.File(table).exists) spark.read.parquet(table)
-          else batch.select(col("source"), col("dn").as("n_docs"),
-            col("did").as("id_sum"), col("dchk").as("content_checksum")).limit(0)
-        val merged = mergeDelta(current, batch.toDF())
-        val tmp = table + ".tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        GridSwap.swap(tmp, table)
-        ()
-      }
-      .outputMode("update").start()
+    DeltaLogSink.maintain(deltas, table, keys, sums)(asStats)
 }

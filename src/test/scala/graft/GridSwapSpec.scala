@@ -33,6 +33,8 @@ class GridSwapSpec extends SparkSpec {
       GridSwap.swap(s"$base/table.tmp", live)
     }
     assert(ex.getMessage.contains("table.tmp"))
+    // and the failed swap left the previous table live, data intact
+    assert(Files.readString(Paths.get(live, "part-0")) == "grid-state")
   }
 
   test("failed swap inside foreachBatch fails the StreamingQuery loudly") {
