@@ -3,7 +3,16 @@ package graft
 import org.apache.spark.sql.Dataset
 import org.apache.spark.storage.StorageLevel
 
-/** Registry for every persist the engine takes INSIDE a query.
+/** The two ways an operator materializes a frame INSIDE a query.
+  *
+  * [[pin]] is for a frame that one query re-reads: loop state, a
+  * per-round frame, or a frame read by sibling branches of one action.
+  * [[persist]] is for a relation that several queries or invocations
+  * share by plan (Dedup.shingled, Similarity.vecBase, the verified pair
+  * list, q289/q330's part–supplier edges). Pins are deliberately
+  * outside the release registry below: see [[pin]].
+  *
+  * The registry covers every persist the engine takes INSIDE a query.
   *
   * Several operators persist a shared intermediate (Dedup.shingled,
   * Similarity.vecBase, q78's packed docs, q110's staged batch, q112's
@@ -30,6 +39,35 @@ object Caches {
   private val live = scala.collection.mutable.ArrayBuffer.empty[Dataset[_]]
   private val hooks = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
 
+  /** Materialize `ds` for re-reading within the query that built it,
+    * and cut its lineage. The only way an operator keeps loop state, a
+    * per-round frame, or a frame that sibling branches of one action
+    * re-enter. The policy, decided once by timing every such site:
+    *
+    *  - A local checkpoint, not a persist. A persisted per-round frame
+    *    keeps its whole plan, so round r re-embeds rounds 1..r-1 (q199's
+    *    peel would re-embed its base 4^8 times and analysis alone
+    *    stalls); a checkpoint is a scan of rows already built.
+    *  - Lazy. Building the pin still runs the frame's shuffle stages
+    *    (AQE materializes them to plan the last one), but the last stage
+    *    runs inside the first job that reads it, and its partitions are
+    *    kept for every later reader. At sf0.1 on 4 cores (`graft.Time`)
+    *    lazy launched fewer jobs than eager at every ported site where
+    *    they differ (q199 53 vs 70, q241 65 vs 78, q254 21 vs 32, q257
+    *    32 vs 41, q289 21 vs 26, q330 21 vs 25, q73 33 vs 37), and no
+    *    query got slower than under the three old disciplines by more
+    *    than their own run-to-run spread. The old eager rule answered
+    *    lazy PERSISTS racing sibling branches; lazy checkpoints were
+    *    measured at those sites (q241, q250, q254, q257) and do not show
+    *    it (SCALE.md, "one in-query materialization").
+    *  - Never registered for [[release]]. A pin belongs to one query:
+    *    another session's `release()` must not drop it mid-query (the
+    *    setting of the q73 cluster > doc_id race), and no other query
+    *    could reuse it anyway, since a checkpoint's RDD identity defeats
+    *    CacheManager plan dedup. The ContextCleaner frees its blocks
+    *    once the query's plans are dropped. */
+  def pin[T](ds: Dataset[T]): Dataset[T] = ds.localCheckpoint(eager = false)
+
   /** Persist `ds` (MEMORY_AND_DISK: spills rather than OOMs under
     * executor pressure) and remember it for the next [[release]]. */
   def persist[T](ds: Dataset[T]): Dataset[T] =
@@ -37,10 +75,31 @@ object Caches {
 
   def persist[T](ds: Dataset[T], level: StorageLevel): Dataset[T] =
     synchronized {
+      trustNoCachedRowCount(ds.sparkSession)
       ds.persist(level)
       live += ds
       ds
     }
+
+  private val ExcludedRules = "spark.sql.adaptive.optimizer.excludedRules"
+  private val PropagateEmpty =
+    "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation"
+
+  /** Sessions share one CacheManager, so a relation persisted here can be
+    * read by one session while another session's job is still building
+    * it. AQE then counts the cache stage as materialized (all its blocks
+    * exist) but reads its row count from accumulators the building tasks
+    * have not merged yet; a count of 0 makes AQEPropagateEmptyRelation
+    * replace the relation with an empty one. That is how q73 returned
+    * every document as its own cluster under concurrent sessions
+    * (ConcurrencySpec; 4 of 360 runs, none with the rule excluded). Any
+    * session that reads engine caches therefore plans without that rule;
+    * the user's own exclusions are kept. */
+  private def trustNoCachedRowCount(s: org.apache.spark.sql.SparkSession): Unit = {
+    val rules = s.conf.getOption(ExcludedRules).filter(_.nonEmpty)
+    if (!rules.exists(_.split(',').map(_.trim).contains(PropagateEmpty)))
+      s.conf.set(ExcludedRules, (rules.toSeq :+ PropagateEmpty).mkString(","))
+  }
 
   /** Invalidation callback run on every [[release]] — for memo caches
     * that hold a reference to a registered Dataset (registration is

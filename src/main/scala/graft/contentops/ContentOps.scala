@@ -2,7 +2,7 @@ package graft.contentops
 
 import graft.QueryPack
 import graft.functions.GzipDecode
-import org.apache.spark.sql.{DataFrame, GraftColumn, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumn, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
@@ -92,21 +92,8 @@ object ContentOps extends QueryPack {
     * decode (A2) → resolve (A3/A4) → validate (A6) → project (A7).
     * KinesisFixtureSpec drives it from a recorded GetRecords response. */
   def envelopeFromWire(s: SparkSession, wire: DataFrame): DataFrame = {
-    val store = s.sparkContext.broadcast(Fixture.objectStore)
-    // A2: gzip decode (zlib wbits 15+32 ≈ GZIPInputStream auto header) —
-    // native codegen expression, not a UDF (SURVEY.md §4).
-    def gunzipStr(c: org.apache.spark.sql.Column) =
-      GraftColumn(GzipDecode(GraftColumn.expr(c)))
-    // A3: S3 fetch stand-in — on miss, log-and-skip semantics (null).
-    // (The real-network form of this exact stage is HttpResolver.resolve.)
-    val resolve = udf((p: String) =>
-      if (p == null) null
-      else if (p.startsWith("https")) // A4: payload-source branch
-        store.value.get(p).map(b => new String(Fixture.gunzip(b),
-          java.nio.charset.StandardCharsets.UTF_8)).orNull
-      else p)
     wire
-      .withColumn("raw", resolve(gunzipStr(col("payload"))))
+      .withColumn("raw", resolvedPayload(s))
       .filter(col("raw").isNotNull) // A19: failed fetch ⇒ skip record
       .withColumn("env", from_json(col("raw"), envelopeSchema))
       .filter(col("env.type") === "content-operation") // A6
@@ -130,14 +117,35 @@ object ContentOps extends QueryPack {
         col("body_raw"))
   }
 
+  /** A2: gzip decode (zlib wbits 15+32 ≈ GZIPInputStream auto header) —
+    * native codegen expression, not a UDF (SURVEY.md §4). */
+  private def gunzipStr(c: Column): Column = GraftColumn(GzipDecode(GraftColumn.expr(c)))
+
+  /** A3: S3 fetch stand-in over the fixture object store — on miss,
+    * log-and-skip semantics (null); A4: only an `https` payload is a
+    * pointer, anything else is the record itself. (The real-network form
+    * of this exact stage is [[HttpResolver.resolve]].) */
+  private def resolveFrom(store: Map[String, Array[Byte]], p: String): String =
+    if (p == null) null
+    else if (p.startsWith("https"))
+      store.get(p).map(b => new String(Fixture.gunzip(b),
+        java.nio.charset.StandardCharsets.UTF_8)).orNull
+    else p
+
+  /** A2 + A3 as one column over the wire frame's `payload`: the resolved
+    * record JSON, null when the fetch failed. */
+  private def resolvedPayload(s: SparkSession): Column = {
+    val store = s.sparkContext.broadcast(Fixture.objectStore)
+    udf((p: String) => resolveFrom(store.value, p)).apply(gunzipStr(col("payload")))
+  }
+
   /** Wire records → gzip-decoded payload strings `(shard, seq, payload)` —
     * the shared front half (A2) of every A3 resolve path: the broadcast
     * stand-in below, and the real-HTTP [[HttpResolver.resolve]]. */
   def decodedPayloads(s: SparkSession): org.apache.spark.sql.Dataset[(Int, String, String)] = {
     import s.implicits._
     s.createDataset(Fixture.wireRecords).toDF()
-      .withColumn("payload_str",
-        GraftColumn(GzipDecode(GraftColumn.expr(col("payload")))))
+      .withColumn("payload_str", gunzipStr(col("payload")))
       .select(col("shard"), col("seq"), col("payload_str")).as[(Int, String, String)]
   }
 
@@ -151,15 +159,7 @@ object ContentOps extends QueryPack {
     val store = s.sparkContext.broadcast(Fixture.objectStore)
     decodedPayloads(s).mapPartitions { it =>
       val client = store.value // the HttpResolver.client stand-in
-      it.map { case (shard, seq, p) =>
-        val raw =
-          if (p == null) null
-          else if (p.startsWith("https"))
-            client.get(p).map(b => new String(Fixture.gunzip(b),
-              java.nio.charset.StandardCharsets.UTF_8)).orNull
-          else p
-        (shard, seq, raw)
-      }
+      it.map { case (shard, seq, p) => (shard, seq, resolveFrom(client, p)) }
     }.toDF("shard", "seq", "raw")
   }
 
@@ -1006,20 +1006,10 @@ object ContentOps extends QueryPack {
     * (`/root/reference/docs/user-guide.md:56-110`). StreamingSpec pins
     * stream==batch convergence against q365.
     */
-  def ansGate(s: SparkSession, wire: DataFrame): DataFrame = {
-    val store = s.sparkContext.broadcast(Fixture.objectStore)
-    def gunzipStr(c: org.apache.spark.sql.Column) =
-      GraftColumn(GzipDecode(GraftColumn.expr(c)))
-    val resolve = udf((p: String) =>
-      if (p == null) null
-      else if (p.startsWith("https"))
-        store.value.get(p).map(b => new String(Fixture.gunzip(b),
-          java.nio.charset.StandardCharsets.UTF_8)).orNull
-      else p)
+  def ansGate(s: SparkSession, wire: DataFrame): DataFrame =
     wire
-      .withColumn("raw", resolve(gunzipStr(col("payload"))))
+      .withColumn("raw", resolvedPayload(s))
       .withColumn("reason", expr(ansGateReasonCase))
-  }
 
   private def q365(s: SparkSession, d: String): DataFrame = {
     import s.implicits._

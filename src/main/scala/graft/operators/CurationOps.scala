@@ -1123,7 +1123,9 @@ object CurationOps extends QueryPack {
   // cover set is fp-keyed, rounds are K ≪ sources by construction.
   private def q257(s: SparkSession, d: String): DataFrame = {
     val K = 4
-    val sb = documents(s, d)
+    // pinned ([[graft.Caches.pin]]): the K rounds and the 2K report
+    // branches all re-enter the (source, bigram) grid and the cover
+    val sb = graft.Caches.pin(documents(s, d)
       // split ONCE per row, then pair up — inlining the split into the
       // per-element lambda re-tokenizes the doc for every bigram (size²
       // character work per doc; measured 7.9 s → 1.3 s at sf0.1)
@@ -1133,23 +1135,17 @@ object CurationOps extends QueryPack {
           |ELSE transform(sequence(1, size(a) - 1),
           |  i -> concat(element_at(a, i), ' ', element_at(a, i + 1))) END)"""
           .stripMargin).as("bg"))
-      // eager localCheckpoint (q73 discipline): the K rounds and the 2K
-      // report branches all re-enter this frame; materializing the
-      // bounded (source, bigram) grid ONCE keeps every round a join of
-      // checkpointed metadata — a lazy persist raced the 5M-row explode+
-      // distinct into existence several times across the union's branches
-      .distinct().localCheckpoint()
+      .distinct())
     val tot = sb.select("bg").distinct().agg(count(lit(1)).as("total"))
     var cov: DataFrame = null
     var report: DataFrame = null
     for (r <- 1 to K) {
       val uncovered = if (cov == null) sb else sb.join(cov, Seq("bg"), "left_anti")
-      val chosen = uncovered.groupBy("source").agg(count(lit(1)).as("gain"))
-        .orderBy(desc("gain"), col("source")).limit(1).localCheckpoint()
+      val chosen = graft.Caches.pin(uncovered.groupBy("source").agg(count(lit(1)).as("gain"))
+        .orderBy(desc("gain"), col("source")).limit(1))
       val newcov = sb.join(broadcast(chosen.select("source")), Seq("source"))
         .select("bg")
-      cov = (if (cov == null) newcov else cov.union(newcov).distinct())
-        .localCheckpoint()
+      cov = graft.Caches.pin(if (cov == null) newcov else cov.union(newcov).distinct())
       val row = chosen.crossJoin(broadcast(cov.agg(count(lit(1)).as("covered"))))
         .crossJoin(broadcast(tot))
         .select(lit(r.toLong).as("round"), col("source"), col("gain"),

@@ -141,7 +141,7 @@ object Dedup extends QueryPack {
     * consumer (q199's peel, clusterLabels' propagation loop, and through
     * it the whole q73/q96/q139/q145/q205/q235/q237/q344 family). r18:
     * persisted HERE, at the last deterministic plan node before the
-    * consumers' per-invocation localCheckpoints — a checkpoint's unique
+    * consumers' per-invocation pins — a checkpoint's unique
     * RDD identity defeats CacheManager plan-dedup, so before this cache
     * every invocation (and every bench run) re-paid the capped
     * co-shingle self-join even with [[explodedIndex]] warm. Pair-grain,
@@ -359,34 +359,18 @@ object Dedup extends QueryPack {
   // flagging the canonical survivor. Implemented as distributed min-label
   // propagation with path halving (all data stays distributed; the driver
   // only sees a scalar convergence count, the standard Pregel-style
-  // orchestration). Each generation is LINEAGE-TRUNCATED via
-  // localCheckpoint, not cache-chained: unpersisting generation N
-  // invalidates cache entries whose plans depend on it (Spark's
-  // non-cascading unpersist rebuilds dependents, dropping their
-  // materialized data), so an iterative cache chain silently recomputes
-  // the whole loop at the final action — the checkpoint both cuts the
-  // O(iterations)-deep lineage and makes each generation independent.
-  // Generation storage lifecycle: checkpointed RDDs are reclaimed by the
-  // ContextCleaner once the driver drops the reference (there is no
-  // dataset-level API to free a localCheckpoint eagerly), and the
-  // retained worst case is bounded and SMALL — ≤ 20 generations × one
-  // narrow row per edge-touched node, i.e. proportional to the capped
-  // pair count, not the corpus. At 100 TB the same loop runs with
-  // reliable (HDFS/S3) checkpointing, where old generation files are
-  // lifecycle-managed the same way — localCheckpoint is the single-node
-  // stand-in. The fixpoint (min id per
-  // component) is unique, so the result is engine-independent — the
-  // oracle computes it with a recursive CTE.
+  // orchestration). Each generation is pinned ([[graft.Caches.pin]]);
+  // the retained worst case is ≤ 20 generations × one narrow row per
+  // edge-touched node, i.e. proportional to the capped pair count, not
+  // the corpus. At 100 TB the same loop runs with reliable (HDFS/S3)
+  // checkpointing. The fixpoint (min id per component) is unique, so
+  // the result is engine-independent — the oracle computes it with a
+  // recursive CTE.
   /** q73's cluster labeling minus the presentation columns: (doc_id,
     * cluster) for EVERY corpus document (edge-touched ones via the
     * propagation loop, singletons by identity). Shared with q96, whose
     * split keys on the cluster id. */
   private[graft] def clusterLabels(s: SparkSession, d: String): DataFrame = {
-    // r18: edges derive from the PERSISTED pair relation (see
-    // [[verifiedPairs]]) and the two pre-loop checkpoints are lazy —
-    // iteration 1's count() materializes both in its own job, so the
-    // loop's per-round job count is unchanged but the two
-    // driver-blocking setup jobs are gone (opt guide §2.6).
     // Both directions of each edge come from ONE scan of the pair row:
     // under a concurrent Caches.release() two scans of the shared pair
     // cache can see different pair sets (likely one reading the cache,
@@ -394,11 +378,10 @@ object Dedup extends QueryPack {
     // direction only leaves a doc that is never a `u` holding its
     // neighbour's larger label, uncounted by `changed` (its `old` is
     // null) — the cluster > doc_id result ConcurrencySpec caught.
-    val edges = verifiedPairs(s, d)
+    val edges = graft.Caches.pin(verifiedPairs(s, d)
       .select(explode(array(struct(col("a").as("u"), col("b").as("v")),
         struct(col("b").as("u"), col("a").as("v")))).as("e"))
-      .select("e.u", "e.v")
-      .localCheckpoint(eager = false)
+      .select("e.u", "e.v"))
     // The propagation loop runs ONLY over edge-touched nodes: a document
     // in no near-dup pair is its own singleton cluster by definition and
     // can never change label, so iterating over the full corpus (as r4
@@ -408,8 +391,7 @@ object Dedup extends QueryPack {
     // the corpus size — at 100 TB that is the difference between a CC loop
     // over billions of rows and one over the (capped) duplicate set.
     val nodes = edges.select(col("u").as("doc_id")).distinct()
-    var labels = nodes.select(col("doc_id"), col("doc_id").as("lbl"))
-      .localCheckpoint(eager = false)
+    var labels = graft.Caches.pin(nodes.select(col("doc_id"), col("doc_id").as("lbl")))
     var changed = 1L
     var iter = 0
     while (changed > 0 && iter < 20) {
@@ -428,11 +410,10 @@ object Dedup extends QueryPack {
       // fixpoint is unchanged, but convergence needs O(log diameter)
       // iterations instead of O(diameter) — with an iteration costing one
       // scheduled job, that is the loop's wall-clock at any scale.
-      val next = step.alias("x")
+      val next = graft.Caches.pin(step.alias("x")
         .join(step.select(col("doc_id").as("pdoc"), col("lbl").as("plbl")).alias("p"),
           col("x.lbl") === col("p.pdoc"))
-        .select(col("x.doc_id"), col("p.plbl").as("lbl"), col("x.old").as("old"))
-        .localCheckpoint(eager = false) // materialized by the count below
+        .select(col("x.doc_id"), col("p.plbl").as("lbl"), col("x.old").as("old")))
       changed = next.filter(col("lbl") =!= col("old")).count()
       labels = next.select("doc_id", "lbl")
       iter += 1
@@ -538,37 +519,22 @@ object Dedup extends QueryPack {
   // and whose round-1 drop counts the whisker mass. Every round's stats
   // ride 1-row aggregates unioned lazily: no driver-side loop test, no
   // collect; at 100 TB each round is one bounded job over the duplicate
-  // set, the q73 cost model exactly. Each generation is LINEAGE-TRUNCATED
-  // with localCheckpoint (q73's discipline, but here it is also a plan-
-  // size necessity: a round references the previous edge set FOUR times
-  // — degree union ×2, semi-join ×2 — so an un-truncated 8-round tree
-  // re-embeds the base subtree 4⁸ times and analysis alone stalls).
+  // set, the q73 cost model exactly. Each generation and each round's
+  // survivor set `keep` is pinned ([[graft.Caches.pin]]): a round reads
+  // the previous edge set FOUR times — degree union ×2, semi-join ×2 —
+  // so an un-truncated 8-round tree re-embeds the base subtree 4⁸ times,
+  // and `keep` is read by both the next generation and the n_nodes count.
   private def q199(s: SparkSession, d: String): DataFrame = {
-    // r18 job-chain reduction (VERDICT r17 task 4; opt guide §2.4/§2.6):
-    // the peel has NO driver-side convergence test — the depth is the
-    // fixed PeelRounds — so nothing forces a driver-blocking job per
-    // round. All checkpoints are now LAZY (localCheckpoint(eager=false)
-    // still truncates the logical plan immediately, which is what kills
-    // the 4^8 analysis blow-up; the RDD materializes inside the final
-    // aggregation job), collapsing 9 serialized jobs into one. And each
-    // round's survivor set `keep` is persisted: its degree shuffle was
-    // previously computed TWICE per round — once under the next
-    // generation's checkpoint lineage (the two semi-joins) and again by
-    // the final action for the n_nodes count — because the checkpoint
-    // RDD's compiled plan cannot share exchanges with the outer plan.
-    // The cache makes both readers hit one materialization. Node-grain,
-    // bounded by the capped pair graph at any scale.
-    var edges = verifiedPairs(s, d).localCheckpoint(eager = false)
+    var edges = graft.Caches.pin(verifiedPairs(s, d))
     val rounds = (1 to PeelRounds).map { r =>
       val deg = edges.select(col("a").as("node"))
         .union(edges.select(col("b").as("node")))
         .groupBy("node").agg(count(lit(1)).as("deg"))
-      val keep = graft.Caches.persist(deg.filter(col("deg") >= 2).select("node"))
-      val nextEdges = edges
+      val keep = graft.Caches.pin(deg.filter(col("deg") >= 2).select("node"))
+      val nextEdges = graft.Caches.pin(edges
         .join(keep.withColumnRenamed("node", "a"), Seq("a"), "left_semi")
         .join(keep.withColumnRenamed("node", "b"), Seq("b"), "left_semi")
-        .select("a", "b")
-        .localCheckpoint(eager = false)
+        .select("a", "b"))
       val row = keep.agg(count(lit(1)).as("n_nodes"))
         .crossJoin(nextEdges.agg(count(lit(1)).as("n_edges")))
         .withColumn("peel_round", lit(r.toLong))
@@ -584,7 +550,7 @@ object Dedup extends QueryPack {
     // every stage CTE is MATERIALIZED: each round references its
     // predecessor 4×, and DuckDB's default CTE inlining would re-expand
     // the whole shingle/pair subtree 4⁸ times (the same blow-up the
-    // Scala side's localCheckpoint truncates)
+    // Scala side's pins truncate)
     val stages = (1 to PeelRounds).map { r =>
       val prev = if (r == 1) "ep0" else s"ep${r - 1}"
       s"""dg$r AS MATERIALIZED (SELECT node, count(*) AS deg FROM

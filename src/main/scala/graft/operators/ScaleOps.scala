@@ -1793,14 +1793,11 @@ object ScaleOps extends QueryPack {
   // union needs no re-scan of the raw events at all.
   private def q250(s: SparkSession, d: String): DataFrame = {
     val rsd = 0.02
-    // localCheckpoint, eager (the q73 discipline): du is read by THREE
-    // sibling subtrees (both sides of the pair grid's self-product and
-    // the flag collapse); a lazy persist lets the broadcast job and the
-    // main job race the 1M-row scan+distinct into existence 2–3× —
-    // measured 8.9 s → ~1.5 s at sf0.1 once the 7.5k-row result is
-    // materialized exactly once.
-    val du = events(s, d).select(col("event_type").as("et"), col("user_id"))
-      .distinct().localCheckpoint()
+    // pinned ([[graft.Caches.pin]]): du is read by THREE sibling
+    // subtrees (both sides of the pair grid's self-product and the flag
+    // collapse)
+    val du = graft.Caches.pin(events(s, d).select(col("event_type").as("et"), col("user_id"))
+      .distinct())
     val types = du.select(col("et")).distinct()
     val pairs = types.select(col("et").as("t1"))
       .crossJoin(types.select(col("et").as("t2")))

@@ -1440,32 +1440,25 @@ object Similarity extends QueryPack {
       .withColumn("cd", expr("((x - mn) * 255) div rng"))
       .select("vec_id", "k", "cd")
     val sk = cd.groupBy("k").agg(sum("cd").as("sk"), count(lit(1)).as("nn"))
-    // every per-round frame is localCheckpoint'd EAGERLY (the q73/q257
-    // discipline): the Spark side has exactly the re-evaluation hazard
-    // the oracle's MATERIALIZED hint fixes in DuckDB — round t's report
-    // row, the next round, and the Rayleigh aggregates all re-enter
-    // dots/v, and with lazy persists the 5-round chain re-executed
-    // multiplicatively (measured 46 s at sf0.1; ~1.5 s checkpointed)
-    val z = cd.join(broadcast(sk), "k")
-      .withColumn("z", expr("nn * cd - sk")).select("vec_id", "k", "z")
-      .localCheckpoint()
-    val tr = z.agg(
-      sum(expr("CAST(z AS DECIMAL(38,0)) * CAST(z AS DECIMAL(38,0))")).as("trace"))
-      .localCheckpoint()
-    var v: DataFrame = st.select(col("k"), lit(1L).as("v")).localCheckpoint()
+    // every per-round frame is pinned ([[graft.Caches.pin]]) — the
+    // oracle's MATERIALIZED hint in DuckDB: round t's report row, the
+    // next round, and the Rayleigh aggregates all re-enter dots/v
+    val z = graft.Caches.pin(cd.join(broadcast(sk), "k")
+      .withColumn("z", expr("nn * cd - sk")).select("vec_id", "k", "z"))
+    val tr = graft.Caches.pin(z.agg(
+      sum(expr("CAST(z AS DECIMAL(38,0)) * CAST(z AS DECIMAL(38,0))")).as("trace")))
+    var v: DataFrame = graft.Caches.pin(st.select(col("k"), lit(1L).as("v")))
     val rounds = (1 to 5).map { t =>
       val vn = v.agg(sum(expr("v * v")).as("vnorm"))
-      val dots = z.join(broadcast(v), "k")
-        .groupBy("vec_id").agg(sum(expr("z * v")).as("dot"))
-        .localCheckpoint()
+      val dots = graft.Caches.pin(z.join(broadcast(v), "k")
+        .groupBy("vec_id").agg(sum(expr("z * v")).as("dot")))
       val w = z.join(dots, "vec_id")
         .groupBy("k")
         .agg(sum(expr("CAST(z AS DECIMAL(38,0)) * CAST(dot AS DECIMAL(38,0))"))
           .as("wk"))
       val m = w.agg(max(abs(col("wk"))).as("m"))
-      val vNext = w.crossJoin(broadcast(m))
-        .select(col("k"), expr("CAST((wk * 127) div m AS BIGINT)").as("v"))
-        .localCheckpoint()
+      val vNext = graft.Caches.pin(w.crossJoin(broadcast(m))
+        .select(col("k"), expr("CAST((wk * 127) div m AS BIGINT)").as("v")))
       val top = vNext.orderBy(abs(col("v")).desc, col("k")).limit(1)
         .select(col("k").as("top_dim"))
       val sd = dots.agg(
@@ -1541,27 +1534,23 @@ object Similarity extends QueryPack {
     val base = vecBase(s, d).select("vec_id", "vi")
     def dist2(c: Column): Column =
       lnorm2(col("vi")) + lnorm2(c) - lit(2L) * ldot(col("vi"), c)
-    // each round's frame is localCheckpoint'd EAGERLY (the q73
-    // discipline): the argmax, the radius aggregate and the next round
-    // all re-enter it, and a lazy persist lets those branches race the
-    // materialization (and chain K scans of lineage depth K)
-    val c1 = base.orderBy("vec_id").limit(1)
-      .select(col("vec_id").as("cid"), col("vi").as("cvi")).localCheckpoint()
-    var cur = base.crossJoin(broadcast(c1))
-      .select(col("vec_id"), col("vi"), dist2(col("cvi")).as("dmin"))
-      .localCheckpoint()
+    // each round's frame is pinned ([[graft.Caches.pin]]): the argmax,
+    // the radius aggregate and the next round all re-enter it
+    val c1 = graft.Caches.pin(base.orderBy("vec_id").limit(1)
+      .select(col("vec_id").as("cid"), col("vi").as("cvi")))
+    var cur = graft.Caches.pin(base.crossJoin(broadcast(c1))
+      .select(col("vec_id"), col("vi"), dist2(col("cvi")).as("dmin")))
     def reportRow(round: Int, center: DataFrame, frame: DataFrame) =
       center.select("cid").crossJoin(broadcast(frame.agg(max("dmin").as("radius_sq"))))
         .select(lit(round.toLong).as("round"), col("cid").as("center_id"),
           col("radius_sq"))
     var rows = reportRow(1, c1, cur)
     for (r <- 2 to K) {
-      val next = cur.orderBy(desc("dmin"), col("vec_id")).limit(1)
-        .select(col("vec_id").as("cid"), col("vi").as("cvi")).localCheckpoint()
-      cur = cur.crossJoin(broadcast(next))
+      val next = graft.Caches.pin(cur.orderBy(desc("dmin"), col("vec_id")).limit(1)
+        .select(col("vec_id").as("cid"), col("vi").as("cvi")))
+      cur = graft.Caches.pin(cur.crossJoin(broadcast(next))
         .select(col("vec_id"), col("vi"),
-          least(col("dmin"), dist2(col("cvi"))).as("dmin"))
-        .localCheckpoint()
+          least(col("dmin"), dist2(col("cvi"))).as("dmin")))
       rows = rows.unionByName(reportRow(r, next, cur))
     }
     rows.orderBy("round")

@@ -600,9 +600,9 @@ object StreamSemantics extends QueryPack {
     * micro-batch; StreamingSpec proves rank equality). */
   private[graft] def rankFromEdges(edges: DataFrame, nodes: DataFrame): DataFrame = {
     val outw = edges.groupBy("src").agg(sum("ew").as("wout"))
-    val p = graft.Caches.persist(edges.join(outw, "src")
+    val p = graft.Caches.pin(edges.join(outw, "src")
       .select(col("src"), col("dst"), expr("(ew * 1000000) div wout").as("p")))
-    val nn = graft.Caches.persist(
+    val nn = graft.Caches.pin(
       nodes.crossJoin(broadcast(nodes.agg(count(lit(1)).as("n")))))
     def iter(r: DataFrame): DataFrame = {
       val contrib = p.join(r.select(col("node").as("src"), col("rank")), "src")

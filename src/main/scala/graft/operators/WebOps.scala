@@ -201,43 +201,31 @@ object WebOps extends QueryPack {
   // contamination spread check). Level-synchronous BFS over the DISTINCT
   // part–supplier bipartite edges: 4 fixed rounds, each a frontier
   // equi-join + distinct + anti-join against the visited set (first
-  // visit = min distance, the level-synchronous invariant), frontier
-  // localCheckpoint'ed per round (the q199/q73 lineage discipline —
-  // without it round r re-executes rounds 1..r-1). The oracle is a
-  // DuckDB RECURSIVE CTE with post-hoc min(dist) — a genuinely different
-  // evaluation strategy agreeing on the hash. At 100 TB edges partition
+  // visit = min distance, the level-synchronous invariant), each level
+  // pinned ([[graft.Caches.pin]]) — without it round r re-executes
+  // rounds 1..r-1. The oracle is a DuckDB RECURSIVE CTE with post-hoc
+  // min(dist) — a genuinely different evaluation strategy agreeing on
+  // the hash. At 100 TB edges partition
   // by key and each round shuffles ONLY the frontier — the standard
   // Pregel-without-Pregel shape.
   private def q289(s: SparkSession, d: String): DataFrame = {
-    // r18 (opt guide §2.4/§2.6): the five per-level eager localCheckpoints
-    // serialized SIX driver-blocking jobs per run — each a full
-    // scheduler round-trip over kilobyte-scale frontier sets — and their
-    // per-invocation RDD ids made every run recompute from scratch.
-    // The unrolled 4-hop expansion has NO driver-side convergence test
-    // (unlike q73's loop), so lineage can stay lazy: persist each level
-    // (node-grain metadata, bounded by the reach set at any scale) and
-    // let the single final aggregation job materialize the chain once.
-    // Plan depth is fixed (4 rounds), so there is no q199-style
-    // exponential-analysis hazard requiring checkpoints.
     val e = graft.Caches.persist(lineitem(s, d)
       .select(col("l_partkey").as("p"), col("l_suppkey").as("sp"))
       .distinct())
-    val p0 = graft.Caches.persist(
-      e.select("p").where(col("p") % 100 === 0).distinct())
-    val s1 = graft.Caches.persist(e.join(p0, "p").select("sp").distinct())
-    val p2 = graft.Caches.persist(e.join(s1, "sp").select("p").distinct()
-      .join(p0, Seq("p"), "left_anti"))
-    val s3 = graft.Caches.persist(e.join(p2, "p").select("sp").distinct()
-      .join(s1, Seq("sp"), "left_anti"))
-    val p4 = graft.Caches.persist(e.join(s3, "sp").select("p").distinct()
-      .join(p0.union(p2), Seq("p"), "left_anti"))
-    val lvl = Seq(
-      p0.select(lit("p").as("kind"), lit(0L).as("dist")),
-      s1.select(lit("s").as("kind"), lit(1L).as("dist")),
-      p2.select(lit("p").as("kind"), lit(2L).as("dist")),
-      s3.select(lit("s").as("kind"), lit(3L).as("dist")),
-      p4.select(lit("p").as("kind"), lit(4L).as("dist")))
-    lvl.reduce(_ union _)
+    val p0 = graft.Caches.pin(e.select("p").where(col("p") % 100 === 0).distinct())
+    // level r crosses from level r-1's kind to the other one, minus the
+    // nodes of its kind already seen at levels r-2, r-4, …
+    val levels = (1 to 4).foldLeft(Vector(p0)) { (lv, r) =>
+      val (from, to) = if (r % 2 == 1) ("p", "sp") else ("sp", "p")
+      val reached = e.join(lv.last, from).select(to).distinct()
+      val seen = lv.indices.filter(i => (r - i) % 2 == 0).map(lv)
+      lv :+ graft.Caches.pin(
+        if (seen.isEmpty) reached else reached.join(seen.reduce(_ union _), Seq(to), "left_anti"))
+    }
+    levels.zipWithIndex
+      .map { case (lv, r) =>
+        lv.select(lit(if (r % 2 == 0) "p" else "s").as("kind"), lit(r.toLong).as("dist")) }
+      .reduce(_ union _)
       .groupBy("kind", "dist").agg(count(lit(1)).as("n_nodes"))
       .orderBy("kind", "dist")
   }
@@ -348,29 +336,23 @@ object WebOps extends QueryPack {
   private def q330(s: SparkSession, d: String): DataFrame = {
     val e = graft.Caches.persist(lineitem(s, d)
       .select(col("l_partkey").as("p"), col("l_suppkey").as("sp")).distinct())
-    // Each level's raw frame is read TWICE (its own max + the next
-    // half-step's join), and the levels CHAIN — unpersisted, the
-    // recomputation fans out 2^depth (measured 7.7 s at sf0.1; 1.3 s
-    // with each level pinned). Score tables are node-grain metadata, so
-    // the persist cost is trivial at any corpus size.
+    // each half-step's raw frame is read twice (its own max and the next
+    // half-step's join) and the half-steps chain, so it is pinned
     def normalized(raw0: DataFrame, key: String): DataFrame = {
-      val raw = graft.Caches.persist(raw0)
+      val raw = graft.Caches.pin(raw0)
       val mx = raw.agg(max("raw").as("mx"))
       raw.crossJoin(broadcast(mx))
         .select(col(key), expr("raw * 1000 div mx").as("score"))
     }
-    // half-step 1: hub ∝ degree (uniform authority prior)
-    val hub1 = normalized(
-      e.groupBy("sp").agg(count(lit(1)).as("raw")), "sp")
-    // half-step 2: authority from hub mass
-    val auth1 = normalized(
-      e.join(hub1, "sp").groupBy("p").agg(sum("score").as("raw")), "p")
-    // half-step 3: hub from authority mass
-    val hub2 = normalized(
-      e.join(auth1, "p").groupBy("sp").agg(sum("score").as("raw")), "sp")
-    // half-step 4: authority from refreshed hub mass
-    val auth2 = normalized(
-      e.join(hub2, "sp").groupBy("p").agg(sum("score").as("raw")), "p")
+    // half-step 1: hub ∝ degree (uniform authority prior); half-steps
+    // 2–4 score the other side from the previous one's mass: authority
+    // from hub, hub from authority, authority from the refreshed hub
+    val halfSteps = (2 to 4).scanLeft(
+      normalized(e.groupBy("sp").agg(count(lit(1)).as("raw")), "sp")) { (prev, t) =>
+      val (from, to) = if (t % 2 == 0) ("sp", "p") else ("p", "sp")
+      normalized(e.join(prev, from).groupBy(to).agg(sum("score").as("raw")), to)
+    }
+    val (hub2, auth2) = (halfSteps(2), halfSteps(3))
     val topA = auth2
       .select(lit("authority").as("kind"), col("p").as("node_id"), col("score"))
       .orderBy(col("score").desc, col("node_id")).limit(10)

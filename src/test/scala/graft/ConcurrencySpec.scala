@@ -5,6 +5,8 @@ import java.util.concurrent.Executors
 import scala.concurrent.duration.Duration
 import scala.concurrent.{Await, ExecutionContext, Future}
 
+import org.apache.spark.sql.SparkSession
+
 /** Multi-session concurrency smoke (r13 verdict task 5): three threads,
   * each with its own `spark.newSession()`, run DISJOINT query slices
   * concurrently; every result must equal the serial run on the parent
@@ -23,56 +25,94 @@ import scala.concurrent.{Await, ExecutionContext, Future}
   *    registry, and every thread calls `Caches.release()` after each
   *    query exactly as Verify does — the documented contract is that a
   *    concurrent release costs the other thread its shared cache (it
-  *    recomputes), never its correctness.
+  *    recomputes), never its correctness;
+  *  - q199 and q289 are iterative: their per-round frames are pinned
+  *    (`Caches.pin`) over a shared persisted relation (the verified pair
+  *    list, the part–supplier edges) that a concurrent release drops.
+  *
+  * A second test runs q73 and q199 for more rounds on every thread and
+  * checks the invariant q73's concurrent-release race broke: min-label
+  * propagation can only give a document a cluster id <= its own id.
   *
   * Runs at sf0.001 — the point is interleaving, not volume.
   */
 class ConcurrencySpec extends SparkSpec {
 
   private val slices: Seq[Seq[String]] = Seq(
-    Seq("q70_nested_in_correlated", "q52_latest_state", "q03_join_topn_revenue"),
-    Seq("q71_correlated_min_equality", "q242_group_topk_exec", "q14_window_rank"),
+    Seq("q70_nested_in_correlated", "q52_latest_state", "q03_join_topn_revenue",
+      "q289_khop_reach"),
+    Seq("q71_correlated_min_equality", "q242_group_topk_exec", "q14_window_rank",
+      "q199_kcore_peel"),
     Seq("q73_dedup_clusters", "q41_jaccard_pairs", "q01_pricing_summary"))
 
   /** Canonical comparable form: every row rendered and sorted. */
-  private def run(s: org.apache.spark.sql.SparkSession, name: String): Seq[String] =
+  private def run(s: SparkSession, name: String): Seq[String] =
     SparkEntry.queries(name)(s, sf).collect().map(_.toString).sorted.toSeq
 
-  test("three sessions, disjoint slices, concurrent release: all results equal serial") {
-    // serial floor on the parent session
-    val want: Map[String, Seq[String]] = slices.flatten.map { n =>
+  /** Runs `work` once per input, each on its own thread and new session,
+    * all at once. */
+  private def concurrently[A, B](inputs: Seq[A])(work: (SparkSession, A) => B): Seq[B] = {
+    val pool = Executors.newFixedThreadPool(inputs.size)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try {
+      val futures = inputs.map(in => Future(work(spark.newSession(), in)))
+      Await.result(Future.sequence(futures), Duration("600s"))
+    } finally {
+      pool.shutdown()
+      Caches.release()
+      spark.catalog.clearCache()
+    }
+  }
+
+  /** The serial floor on the parent session, released after each query. */
+  private def serial(names: Seq[String]): Map[String, Seq[String]] =
+    names.map { n =>
       val r = n -> run(spark, n)
       Caches.release(); spark.catalog.clearCache()
       r
     }.toMap
 
-    val pool = Executors.newFixedThreadPool(slices.size)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      val futures = slices.map { slice =>
-        Future {
-          val session = spark.newSession()
-          // two rounds per thread so every query also runs AFTER some other
-          // thread's release has evicted whatever cache it was sharing
-          (1 to 2).flatMap { round =>
-            slice.map { n =>
-              val r = (n, round) -> run(session, n)
-              Caches.release()
-              r
-            }
-          }
+  test("three sessions, disjoint slices, concurrent release: all results equal serial") {
+    val want = serial(slices.flatten)
+    val got = concurrently(slices) { (session, slice) =>
+      // two rounds per thread so every query also runs AFTER some other
+      // thread's release has evicted whatever cache it was sharing
+      (1 to 2).flatMap { round =>
+        slice.map { n =>
+          val r = (n, round) -> run(session, n)
+          Caches.release()
+          r
         }
       }
-      val got = Await.result(Future.sequence(futures), Duration("600s")).flatten
-      got.foreach { case ((name, round), res) =>
-        assert(res == want(name),
-          s"$name (round $round) diverged under concurrency: " +
-            s"got ${res.size} rows, want ${want(name).size}")
+    }.flatten
+    got.foreach { case ((name, round), res) =>
+      assert(res == want(name),
+        s"$name (round $round) diverged under concurrency: " +
+          s"got ${res.size} rows, want ${want(name).size}")
+    }
+  }
+
+  test("q73 and q199 on three sessions for four rounds: cluster <= doc_id, equal to serial") {
+    val q73 = "q73_dedup_clusters"
+    val names = Seq(q73, "q199_kcore_peel")
+    val want = serial(names)
+    val got = concurrently(1 to 3) { (session, _) =>
+      (1 to 4).flatMap { round =>
+        names.map { n =>
+          val rows = SparkEntry.queries(n)(session, sf).collect().toSeq
+          Caches.release()
+          (n, round, rows)
+        }
       }
-    } finally {
-      pool.shutdown()
-      Caches.release()
-      spark.catalog.clearCache()
+    }.flatten
+    got.foreach { case (name, round, rows) =>
+      if (name == q73)
+        rows.foreach { r =>
+          val (doc, cluster) = (r.getAs[Long]("doc_id"), r.getAs[Long]("cluster"))
+          assert(cluster <= doc, s"q73 (round $round): doc $doc labelled cluster $cluster")
+        }
+      assert(rows.map(_.toString).sorted == want(name),
+        s"$name (round $round) diverged under concurrency")
     }
   }
 }

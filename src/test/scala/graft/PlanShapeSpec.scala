@@ -70,7 +70,7 @@ class PlanShapeSpec extends SparkSpec {
       // harness bug (the filter list drifted from Spark's node names).
       // NOTE: the iterative queries (k-core peel, collapse audit, k-hop,
       // coverage selection) legitimately show NO parquet scan here: their
-      // final frame unions localCheckpointed intermediates, so the scans
+      // final frame unions pinned (Caches.pin) intermediates, so the scans
       // live in the (already executed) per-round plans.
       assert(got.nonEmpty, s"empty skeleton for $name")
       val file = goldenDir.resolve(s"$name.txt")
