@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Driver-run benchmark: times every SparkEntry query on
@@ -28,21 +27,8 @@ import java.nio.file.{Files, Paths}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val runs = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts is parquet TIMESTAMP(NANOS); see graft.Tables.events.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // applied AT CONTEXT INIT (unlike setLogLevel below, which only
-      // takes effect once the session exists): kills the ~15 Executor/
-      // BlockManager startup INFO lines that would otherwise share the
-      // driver's bounded output tail with the JSON line
-      .config("spark.log.level", "ERROR")
-      .getOrCreate()
+    val spark = Session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     // ERROR, not WARN: the driver's bounded output tail is shared between
     // log noise and the JSON line. In r5 the WindowExec/CacheManager WARN
     // lines consumed ~1.1 KB of the ~2 KB tail and the JSON line was cut

@@ -28,16 +28,16 @@ import org.apache.spark.storage.StorageLevel
   * `Dataset.persist`, and the consumer (or harness) calls [[release]]
   * after their action completes — it unpersists exactly the engine's
   * registered relations (never the consumer's own caches, which a blunt
-  * `spark.catalog.clearCache()` would also destroy) and runs the
-  * registered invalidation hooks (ContentOps drops its envelope memo so
-  * the next query rebuilds instead of silently recomputing uncached).
-  * Verify, Bench, and SparkSpec all call it, so harness behavior is
-  * unchanged; the hook simply makes the same hygiene available to
-  * embedded use.
+  * `spark.catalog.clearCache()` would also destroy). Verify, Bench, and
+  * SparkSpec all call it, so harness behavior is unchanged; the registry
+  * simply makes the same hygiene available to embedded use.
+  *
+  * Nothing else needs invalidating on release: a shared relation is found
+  * again by plan, so an operator persists it on every build (the
+  * CacheManager keeps one copy) and never memoizes the Dataset itself.
   */
 object Caches {
   private val live = scala.collection.mutable.ArrayBuffer.empty[Dataset[_]]
-  private val hooks = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
 
   /** Materialize `ds` for re-reading within the query that built it,
     * and cut its lineage. The only way an operator keeps loop state, a
@@ -101,28 +101,15 @@ object Caches {
       s.conf.set(ExcludedRules, (rules.toSeq :+ PropagateEmpty).mkString(","))
   }
 
-  /** Invalidation callback run on every [[release]] — for memo caches
-    * that hold a reference to a registered Dataset (registration is
-    * idempotent per callback site: register once at object init). */
-  def onRelease(f: () => Unit): Unit = synchronized { hooks += f }
-
-  /** Unpersist every engine-registered relation and run invalidation
-    * hooks. Non-blocking: block deletion proceeds asynchronously, the
-    * plans are immediately reusable (they just recompute). Safe to call
-    * at any quiescent point; concurrent queries in other threads simply
-    * lose their shared cache and recompute.
-    *
-    * The registry monitor is released BEFORE unpersists and hooks run:
-    * a hook takes its own memo lock (e.g. the ContentOps envelope
-    * WeakHashMap), and that memo's builder calls [[persist]] while
-    * holding it — running hooks under this monitor was a lock-order
-    * inversion that deadlocked two concurrent sessions (caught by
-    * ConcurrencySpec's first run, r14). Snapshot-then-release keeps the
-    * contract (everything registered before this call is freed) without
-    * ever holding two locks at once. */
+  /** Unpersist every engine-registered relation. Non-blocking: block
+    * deletion proceeds asynchronously, the plans are immediately reusable
+    * (they just recompute). Safe to call at any quiescent point;
+    * concurrent queries in other threads simply lose their shared cache
+    * and recompute. The registry monitor is released before the
+    * unpersists run, so a release never holds it while Spark works. */
   def release(): Unit = {
-    val (ds, hs) = synchronized {
-      val snapshot = (live.toList, hooks.toList)
+    val ds = synchronized {
+      val snapshot = live.toList
       live.clear()
       snapshot
     }
@@ -130,7 +117,6 @@ object Caches {
       try d.unpersist(blocking = false)
       catch { case _: Throwable => () } // a stopped session has nothing to free
     }
-    hs.foreach(f => try f() catch { case _: Throwable => () })
   }
 
   /** Number of currently-registered live relations (spec observability). */

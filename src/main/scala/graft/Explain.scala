@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit dev tool: print the shuffle/join/scan/window skeleton of one
   * or more registered queries (comma-separated in args(0); optional sfDir
   * in args(1)). The per-round SCALE.md plan audits are taken from this
@@ -9,12 +7,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Session(8)
     spark.sparkContext.setLogLevel("ERROR")
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     // args(2) == "formatted": full `.explain("formatted")` text instead of

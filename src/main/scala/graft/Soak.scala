@@ -43,16 +43,9 @@ import graft.streaming.{ContentStream, GridStream, IndexStream, MetricStream}
 object Soak {
 
   private def session(): SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-soak")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .getOrCreate()
+    val s = Session(8)
+    s.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -4,7 +4,6 @@ import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.ListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Dev timing tool (sibling of [[Explain]]): run one or more registered
   * queries (comma-separated in args(0); optional sfDir in args(1)) with
@@ -17,13 +16,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Time {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("ERROR")
     val jobs = new AtomicLong
     spark.sparkContext.addSparkListener(new SparkListener {

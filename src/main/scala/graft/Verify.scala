@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -15,15 +14,7 @@ object Verify {
         val subs = args(2).split(',').filter(_.nonEmpty)
         (n: String) => subs.exists(n.contains)
       } else (_: String) => true
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.ts is parquet TIMESTAMP(NANOS); see graft.Tables.events.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Every query that fails to EXECUTE must leave a machine-readable
@@ -42,7 +33,7 @@ object Verify {
       // same per-query isolation as Bench: 120+ queries in one JVM would
       // otherwise accumulate every persisted relation as resident blocks.
       // Caches.release() is the library-consumer hook (unpersists exactly
-      // the engine's registered relations + drops memos); the clearCache
+      // the engine's registered relations); the clearCache
       // keeps the harness's original belt-and-suspenders behavior.
       Caches.release()
       spark.catalog.clearCache()

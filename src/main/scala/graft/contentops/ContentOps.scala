@@ -16,6 +16,11 @@ import org.apache.spark.sql.types._
   *   (A6) → projection (A7) + operation-kind parse (A8) → keyed semantic
   *   operators (A9–A18).
   *
+  * Each wire record is decoded, resolved and parsed exactly once
+  * (ContentOpsSpec pins the executed plan), and the same wire input
+  * always yields an equal plan, so the CacheManager shares one persisted
+  * envelope across queries and sessions.
+  *
   * The DuckDB oracle for every query starts from a VALUES literal of the
   * expected envelope rows (same fixture object), so a hash match certifies
   * the binary decode path AND the semantics.
@@ -23,15 +28,16 @@ import org.apache.spark.sql.types._
   * Scale notes (100 TB): the ingest stage is per-row/per-partition only —
   * no shuffle until a keyed operator; latest-state (q52) uses `max_by`
   * partial aggregation on the composite key so the shuffle carries one
-  * pre-reduced row per key per map partition; the object-store resolve is
-  * a broadcast-map stand-in for a per-partition HTTP client
-  * (mapPartitions), which is the production shape.
+  * pre-reduced row per key per map partition; the object-store resolve
+  * reads the static fixture store, the stand-in for a per-partition HTTP
+  * client (mapPartitions, [[HttpResolver]]), which is the production shape.
   */
 object ContentOps extends QueryPack {
 
-  /** Envelope schema minus `body` (user-guide.md:56-110). `body` stays a
-    * raw JSON string (open schema, :112-114) accessed via
-    * get_json_object — never a guessed StructType. */
+  /** Envelope schema (user-guide.md:56-110). `body` is open (:112-114),
+    * so it is read as a string: the JSON reader keeps a nested object's
+    * text for a string field. Its fields are read from that text, never
+    * through a guessed StructType. */
   private val triggerSchema = StructType(Seq(
     StructField("type", StringType),
     StructField("id", StringType),
@@ -48,38 +54,20 @@ object ContentOps extends QueryPack {
     StructField("branch", StringType),
     StructField("published", BooleanType),
     StructField("created", BooleanType),
-    StructField("trigger", triggerSchema)))
+    StructField("trigger", triggerSchema),
+    StructField("body", StringType)))
 
   /** The full ingest pipeline: wire bytes → parsed envelope DataFrame. */
   def envelope(s: SparkSession): DataFrame = envelopeWithBody(s).drop("body_raw")
 
-  /** The ingest runs ONCE per session and is cached (301 rows): the nine
-    * semantic queries share the materialized envelope, exactly as the
-    * 100 TB deployment would query a materialized envelope table instead
-    * of re-running decode per query. Weak keys let test sessions collect. */
-  private val envelopeCache =
-    new java.util.WeakHashMap[SparkSession, java.lang.ref.WeakReference[DataFrame]]()
-
-  // Caches.release() unpersists the envelope blocks; dropping the memo
-  // with them makes the next query re-persist instead of silently
-  // recomputing the uncached plan on every reuse.
-  graft.Caches.onRelease(() => envelopeCache.synchronized(envelopeCache.clear()))
-
-  /** envelope + the raw open-schema body JSON (for the variant path).
-    * The value is weakly held too: a strongly-held DataFrame references its
-    * SparkSession, which would pin the weak KEY forever. If the value is
-    * collected, rebuilding is cheap — `.cache()` on the identical plan is
-    * deduplicated by the session's CacheManager, so no blocks leak. */
-  def envelopeWithBody(s: SparkSession): DataFrame = envelopeCache.synchronized {
-    val ref = envelopeCache.get(s)
-    val hit = if (ref == null) null else ref.get()
-    if (hit != null) hit
-    else {
-      val built = graft.Caches.persist(buildEnvelope(s))
-      envelopeCache.put(s, new java.lang.ref.WeakReference(built))
-      built
-    }
-  }
+  /** envelope + the raw open-schema body JSON (for the variant path),
+    * persisted: the semantic queries share the materialized envelope, as
+    * a deployment would query a materialized envelope table instead of
+    * re-running the decode per query. Every build has an equal plan, so
+    * the CacheManager hands each later build, in any session, the first
+    * build's cache; after [[graft.Caches.release]] the next build
+    * persists afresh. */
+  def envelopeWithBody(s: SparkSession): DataFrame = graft.Caches.persist(buildEnvelope(s))
 
   private def buildEnvelope(s: SparkSession): DataFrame = {
     import s.implicits._
@@ -90,32 +78,31 @@ object ContentOps extends QueryPack {
     * `(shard, seq, payload binary)` — the fixture source, or
     * `KinesisWireSource.toWireRecords(connectorFrame)` — through
     * decode (A2) → resolve (A3/A4) → validate (A6) → project (A7).
-    * KinesisFixtureSpec drives it from a recorded GetRecords response. */
-  def envelopeFromWire(s: SparkSession, wire: DataFrame): DataFrame = {
+    * KinesisFixtureSpec drives it from a recorded GetRecords response.
+    *
+    * One pass per record: the decoded, resolved JSON is parsed once, and
+    * the parse sits in a generator (`inline`), which predicate pushdown
+    * does not cross, so the A6 filter cannot copy the decode and the
+    * parse below the projection. A failed fetch (A19) parses to a null
+    * `type`, so the A6 filter is also the skip. */
+  def envelopeFromWire(s: SparkSession, wire: DataFrame): DataFrame =
     wire
-      .withColumn("raw", resolvedPayload(s))
-      .filter(col("raw").isNotNull) // A19: failed fetch ⇒ skip record
-      .withColumn("env", from_json(col("raw"), envelopeSchema))
-      .filter(col("env.type") === "content-operation") // A6
-      .withColumn("body_raw", get_json_object(col("raw"), "$.body"))
+      .select(col("seq"), col("shard"),
+        inline(array(from_json(resolvedPayload, envelopeSchema))))
+      .filter(col("type") === "content-operation") // A6 + A19
+      .select(col("*"),
+        json_tuple(col("body"), "headline", "word_count").as(Seq("headline", "word_count")))
       .select( // A7 projection
-        col("seq"), col("shard"),
-        col("env.organization_id").as("organization_id"),
-        col("env.operation").as("operation"),
-        col("env.date").as("date"),
-        col("env.id").as("id"),
-        col("env.branch").as("branch"),
-        col("env.published").as("published"),
-        col("env.created").as("created"),
-        col("env.trigger.type").as("trg_type"),
-        col("env.trigger.id").as("trg_id"),
-        col("env.trigger.referent_update").as("referent_update"),
-        col("env.trigger.priority").as("priority"),
-        col("env.trigger.app_name").as("app_name"),
-        get_json_object(col("body_raw"), "$.headline").as("headline"),
-        get_json_object(col("body_raw"), "$.word_count").cast("int").as("word_count"),
-        col("body_raw"))
-  }
+        col("seq"), col("shard"), col("organization_id"), col("operation"),
+        col("date"), col("id"), col("branch"), col("published"), col("created"),
+        col("trigger.type").as("trg_type"),
+        col("trigger.id").as("trg_id"),
+        col("trigger.referent_update").as("referent_update"),
+        col("trigger.priority").as("priority"),
+        col("trigger.app_name").as("app_name"),
+        col("headline"),
+        col("word_count").cast("int").as("word_count"),
+        col("body").as("body_raw"))
 
   /** A2: gzip decode (zlib wbits 15+32 ≈ GZIPInputStream auto header) —
     * native codegen expression, not a UDF (SURVEY.md §4). */
@@ -132,15 +119,16 @@ object ContentOps extends QueryPack {
         java.nio.charset.StandardCharsets.UTF_8)).orNull
     else p
 
+  /** A3 as one UDF over the static fixture store. Defined once, so every
+    * plan that resolves the same wire input is equal to every other. */
+  private val resolveUdf = udf((p: String) => resolveFrom(Fixture.objectStore, p))
+
   /** A2 + A3 as one column over the wire frame's `payload`: the resolved
     * record JSON, null when the fetch failed. */
-  private def resolvedPayload(s: SparkSession): Column = {
-    val store = s.sparkContext.broadcast(Fixture.objectStore)
-    udf((p: String) => resolveFrom(store.value, p)).apply(gunzipStr(col("payload")))
-  }
+  private def resolvedPayload: Column = resolveUdf(gunzipStr(col("payload")))
 
   /** Wire records → gzip-decoded payload strings `(shard, seq, payload)` —
-    * the shared front half (A2) of every A3 resolve path: the broadcast
+    * the shared front half (A2) of every A3 resolve path: the fixture
     * stand-in below, and the real-HTTP [[HttpResolver.resolve]]. */
   def decodedPayloads(s: SparkSession): org.apache.spark.sql.Dataset[(Int, String, String)] = {
     import s.implicits._
@@ -149,16 +137,15 @@ object ContentOps extends QueryPack {
       .select(col("shard"), col("seq"), col("payload_str")).as[(Int, String, String)]
   }
 
-  /** A3 via mapPartitions with the broadcast object store standing in for
+  /** A3 via mapPartitions with the fixture object store standing in for
     * the network; the REAL client path is [[HttpResolver.resolve]], which
     * shares [[decodedPayloads]] and differs only in how bytes are fetched.
     * Returns (shard, seq, raw). ContentOpsSpec proves both row-identical
     * to the projection-based path used by the oracle queries. */
   def resolveViaMapPartitions(s: SparkSession): DataFrame = {
     import s.implicits._
-    val store = s.sparkContext.broadcast(Fixture.objectStore)
     decodedPayloads(s).mapPartitions { it =>
-      val client = store.value // the HttpResolver.client stand-in
+      val client = Fixture.objectStore // the HttpResolver.client stand-in
       it.map { case (shard, seq, p) => (shard, seq, resolveFrom(client, p)) }
     }.toDF("shard", "seq", "raw")
   }
@@ -900,7 +887,7 @@ object ContentOps extends QueryPack {
     * stream-maintained grid equals the batch grid exactly and this
     * closing join is stream ≡ batch by construction). */
   def amplificationFrom(wins: DataFrame, base: DataFrame): DataFrame = {
-    val scanned = base.alias("o").join(broadcast(wins).alias("w"),
+    val scanned = base.alias("o").join(wins.hint("broadcast").alias("w"),
         col("o.shard") === col("w.shard") &&
           col("o.seqn") >= col("w.seq_lo") && col("o.seqn") <= col("w.seq_hi"))
       .groupBy(col("w.shard").as("shard"), col("w.day").as("day"))
@@ -966,30 +953,32 @@ object ContentOps extends QueryPack {
     v <- Seq("insert", "delete"); t <- Seq("story", "gallery", "video", "redirect")
   } yield s"'$v-$t'").mkString(", ")
 
-  /** The gate's first-fail reason coding over the resolved raw JSON —
-    * one row-local CASE, shared verbatim by the batch audit (q365) and
-    * the streaming wire stage ([[ansGate]]) so the two classifications
-    * cannot drift.
+  /** The nine fields the gate checks, all read as strings: a string field
+    * holds any JSON value's text, as a `$.field` path lookup returns it,
+    * and null for an absent member or a JSON `null`. */
+  private val ansGateSchema = StructType(
+    Seq("type", "organization_id", "operation", "date", "id", "branch",
+      "published", "created").map(StructField(_, StringType)) :+
+      StructField("trigger", StructType(Seq(StructField("priority", StringType)))))
+
+  /** The gate's first-fail reason coding over the resolved raw JSON `raw`
+    * and its one parse `j` — one row-local CASE, shared verbatim by the
+    * batch audit (q365) and the streaming wire stage ([[ansGate]]) so the
+    * two classifications cannot drift.
     */
   private val ansGateReasonCase =
     s"""CASE
        | WHEN raw IS NULL THEN 'fetch_failed'
-       | WHEN get_json_object(raw, '$$.type') IS NULL
-       |   OR get_json_object(raw, '$$.type') <> 'content-operation'
+       | WHEN j.type IS NULL OR j.type <> 'content-operation'
        |  THEN 'not_content_operation'
-       | WHEN get_json_object(raw, '$$.organization_id') IS NULL
-       |   OR get_json_object(raw, '$$.operation') IS NULL
-       |   OR get_json_object(raw, '$$.date') IS NULL
-       |   OR get_json_object(raw, '$$.id') IS NULL
-       |   OR get_json_object(raw, '$$.branch') IS NULL
-       |   OR get_json_object(raw, '$$.published') IS NULL
-       |   OR get_json_object(raw, '$$.created') IS NULL
+       | WHEN j.organization_id IS NULL OR j.operation IS NULL OR j.date IS NULL
+       |   OR j.id IS NULL OR j.branch IS NULL OR j.published IS NULL
+       |   OR j.created IS NULL
        |  THEN 'missing_required'
-       | WHEN get_json_object(raw, '$$.operation') NOT IN ($opEnum)
+       | WHEN j.operation NOT IN ($opEnum)
        |  THEN 'bad_operation'
-       | WHEN get_json_object(raw, '$$.trigger.priority') IS NOT NULL
-       |   AND get_json_object(raw, '$$.trigger.priority')
-       |       NOT IN ('ingestion', 'standard')
+       | WHEN j.trigger.priority IS NOT NULL
+       |   AND j.trigger.priority NOT IN ('ingestion', 'standard')
        |  THEN 'bad_priority'
        | ELSE 'ok'
        |END""".stripMargin
@@ -998,8 +987,8 @@ object ContentOps extends QueryPack {
     * (possibly streaming) wire frame `(shard, seq, payload)` — the same
     * shape `FixtureKinesisSource`/`WireSource` emit — and appends the
     * first-fail `reason` column per record. Everything is row-local
-    * (codegen gzip + fixture object-store resolve + one CASE), so the
-    * stage composes into a Structured Streaming micro-batch with no
+    * (codegen gzip + fixture object-store resolve + one parse + one CASE),
+    * so the stage composes into a Structured Streaming micro-batch with no
     * state and no mode constraint; its production seat is right after
     * the Kinesis read, tagging records BEFORE the A6 filter so schema
     * violations are observable instead of silently dropped
@@ -1008,8 +997,10 @@ object ContentOps extends QueryPack {
     */
   def ansGate(s: SparkSession, wire: DataFrame): DataFrame =
     wire
-      .withColumn("raw", resolvedPayload(s))
+      .withColumn("raw", resolvedPayload)
+      .withColumn("j", from_json(col("raw"), ansGateSchema))
       .withColumn("reason", expr(ansGateReasonCase))
+      .drop("j")
 
   private def q365(s: SparkSession, d: String): DataFrame = {
     import s.implicits._

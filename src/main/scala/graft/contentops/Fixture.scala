@@ -175,9 +175,9 @@ object Fixture {
     alien +: real
   }
 
-  /** The pre-signed-URL object store stand-in (resolved via broadcast map
-    * locally; an HTTP client per partition in production). Broken URLs are
-    * absent by construction. */
+  /** The pre-signed-URL object store stand-in (read directly by the
+    * resolve step locally; an HTTP client per partition in production).
+    * Broken URLs are absent by construction. */
   lazy val objectStore: Map[String, Array[Byte]] =
     ops.filter(o => isIndirect(o.seq) && !isBroken(o.seq))
       .map(o => urlFor(o.seq) -> gzip(envelopeJson(o).getBytes(UTF_8))).toMap

@@ -29,7 +29,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
   * log-and-skip contract of the reference loop (user-guide.md:34-39).
   * ContentOpsSpec drives this against an in-JVM HTTP fixture server:
   * 200+gzip, 404, timeout, and corrupt-body paths, proving the output
-  * row-identical to the broadcast-map stand-in on the same wire fixture.
+  * row-identical to the fixture-store stand-in on the same wire fixture.
   */
 object HttpResolver {
 

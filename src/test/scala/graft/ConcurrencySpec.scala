@@ -16,8 +16,9 @@ import org.apache.spark.sql.SparkSession
   *  - q70/q71 materialize temp views (`createOrReplaceTempView`) —
   *    session-scoped by Spark contract, so two sessions running both
   *    concurrently must not clobber each other's `v_supplier`;
-  *  - q52 reaches the ContentOps envelope memo, a WeakHashMap keyed BY
-  *    SESSION — each session must build (and cache) its own envelope;
+  *  - q52 reads the persisted ContentOps envelope, whose plan is equal
+  *    in every session — all sessions share one cached envelope, which
+  *    a concurrent release drops;
   *  - q242 installs the GroupTopK strategy into the session's
   *    experimental methods — install must be idempotent per session and
   *    independent across sessions;

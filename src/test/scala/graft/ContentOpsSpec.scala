@@ -506,4 +506,39 @@ class ContentOpsSpec extends SparkSpec {
     // (and so all nine semantic queries) must never see a 9000xx seq
     assert(ContentOps.envelope(spark).filter(col("seq") >= "900000").count() === 0)
   }
+
+  test("one pass per wire record: the ingest and gate plans decode once, parse once, look up no path") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.{Expression, GetJsonObject, JsonToStructs}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    // a parquet scan, so ConvertToLocalRelation cannot fold the plan away
+    val dir = java.nio.file.Files.createTempDirectory("graft-onepass").toString
+    spark.createDataset(Fixture.auditWireRecords).write.parquet(s"$dir/wire")
+    val wire = spark.read.parquet(s"$dir/wire")
+    def counts(df: org.apache.spark.sql.DataFrame): (Int, Int, Int) = {
+      val plan = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+      val exprs: Seq[Expression] = plan.flatMap(_.expressions).flatMap(_.collect { case e => e })
+      (exprs.count(_.isInstanceOf[graft.functions.GzipDecode]),
+        exprs.count(_.isInstanceOf[JsonToStructs]),
+        exprs.count(_.isInstanceOf[GetJsonObject]))
+    }
+    assert(counts(ContentOps.envelopeFromWire(spark, wire)) === ((1, 1, 0)))
+    assert(counts(ContentOps.ansGate(spark, wire)) === ((1, 1, 0)))
+  }
+
+  test("every envelope build, in any session, reads the first build's cache") {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    def cached(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.withCachedData.collect { case r: InMemoryRelation => r.cacheBuilder }
+    spark.catalog.clearCache() // earlier tests cache frames built on the envelope
+    val first = ContentOps.envelope(spark)
+    first.count()
+    val builder = cached(first)
+    assert(builder.size === 1)
+    assert(cached(ContentOps.envelope(spark)).map(_ eq builder.head) === Seq(true))
+    assert(cached(ContentOps.envelope(spark.newSession())).map(_ eq builder.head) === Seq(true))
+  }
 }

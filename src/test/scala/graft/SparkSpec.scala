@@ -19,14 +19,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     try { graft.Caches.release(); spark.catalog.clearCache() }
     finally super.afterAll()
   }
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session(8)
   spark.sparkContext.setLogLevel("WARN")
 
   lazy val sf: String = "/root/testdata/sf0.001"
