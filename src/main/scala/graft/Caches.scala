@@ -69,14 +69,17 @@ object Caches {
   def pin[T](ds: Dataset[T]): Dataset[T] = ds.localCheckpoint(eager = false)
 
   /** Persist `ds` (MEMORY_AND_DISK: spills rather than OOMs under
-    * executor pressure) and remember it for the next [[release]]. */
+    * executor pressure) and remember it for the next [[release]]. A plan
+    * the CacheManager already holds is only registered: persisting it
+    * again changes nothing and logs "Asked to cache already cached
+    * data" once per rebuild of a shared relation. */
   def persist[T](ds: Dataset[T]): Dataset[T] =
     persist(ds, StorageLevel.MEMORY_AND_DISK)
 
   def persist[T](ds: Dataset[T], level: StorageLevel): Dataset[T] =
     synchronized {
       trustNoCachedRowCount(ds.sparkSession)
-      ds.persist(level)
+      if (ds.storageLevel == StorageLevel.NONE) ds.persist(level)
       live += ds
       ds
     }

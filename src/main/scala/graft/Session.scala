@@ -5,7 +5,15 @@ import org.apache.spark.sql.SparkSession
 /** The engine's local Spark session, built one way for every entry point
   * (Bench, Verify, Explain, Time, Soak and the test suites): `cores`
   * worker threads and as many shuffle partitions, UTC session time, no
-  * UI. Callers set their own log level afterwards. */
+  * UI, and the RocksDB state store. Callers set their own log level
+  * afterwards.
+  *
+  * Every keyed streaming operator in `graft.streaming` is a
+  * `transformWithState` processor, which Spark runs only on the RocksDB
+  * state store provider; it is also the store unbounded keyed state
+  * (latest state over all documents, fingerprint indexes) needs. A
+  * consumer that builds its own session must set
+  * `spark.sql.streaming.stateStore.providerClass` to the same provider. */
 object Session {
   def apply(cores: Int): SparkSession = SparkSession.builder()
     .master(s"local[$cores]")
@@ -20,5 +28,7 @@ object Session {
     // BlockManager startup INFO lines that would otherwise share Bench's
     // bounded output tail with its JSON line
     .config("spark.log.level", "ERROR")
+    .config("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     .getOrCreate()
 }

@@ -44,8 +44,6 @@ object Soak {
 
   private def session(): SparkSession = {
     val s = Session(8)
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     s.sparkContext.setLogLevel("WARN")
     s
   }
@@ -145,7 +143,7 @@ object Soak {
     val indexQ = IndexStream.maintain(
       files("docs", new org.apache.spark.sql.types.StructType()
         .add("doc_id", "long").add("text", "string")),
-      s"$work/index_table", checkpoint = Some(s"$work/ckpt_index"))
+      s"$work/index_table")
 
     val gridQ = GridStream.maintain(
       files("envelopes", envSchema)

@@ -227,7 +227,7 @@ object ContentOps extends QueryPack {
   // batch form: per (id, branch), walk the published-copy timeline in event
   // order; emit a transition whenever existence flips (insert after
   // null/delete ⇒ publish; delete after insert ⇒ unpublish). The streaming
-  // twin lives in graft.streaming (flatMapGroupsWithState).
+  // twin is graft.streaming.ContentStream.publishTransitions.
   private def q54(s: SparkSession, d: String): DataFrame = {
     val w = Window.partitionBy("id", "branch").orderBy(col("date"), col("seq"))
     envelope(s)

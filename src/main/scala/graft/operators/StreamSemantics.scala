@@ -23,7 +23,7 @@ import org.apache.spark.sql.expressions.Window
   *  - q30's watermark threshold is one scalar broadcast, not a join;
   *  - session/transition ops (q27/q31) genuinely need per-key time order —
   *    a single hash shuffle on user_id, then in-partition sort, matching
-  *    what `flatMapGroupsWithState` does in the streaming form.
+  *    what the `transformWithState` processors do in the streaming form.
   */
 object StreamSemantics extends QueryPack {
   import Tables._

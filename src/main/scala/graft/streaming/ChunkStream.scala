@@ -34,10 +34,9 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, StreamingQ
   *    StreamingSpec asserts stream ≡ batch equality.
   *
   * Like IndexStream, state is fingerprint-grain (grows with distinct
-  * content) — inherent to exact chunk dedup; TTL is the retention lever,
-  * exposed as [[maintain]]'s `ttl` parameter: a fingerprint not re-seen
-  * within the TTL is evicted and a later re-arrival is admitted as
-  * first-sight again (the bounded-retention chunk store).
+  * content) — inherent to exact chunk dedup. Admission state is kept
+  * for good: an evicted fingerprint would be re-admitted as first-sight
+  * and count its bytes as unique twice, which batch q220 never does.
   */
 object ChunkStream {
 
@@ -54,12 +53,12 @@ object ChunkStream {
     * count, flagging the key's FIRST batch. handleInputRows sees the whole
     * batch's rows for the key, so the instance count folds locally before
     * the single state read/write. */
-  class ChunkStoreProcessor(ttl: TTLConfig)
+  class ChunkStoreProcessor
       extends StatefulProcessor[String, (String, String, Long), ChunkDelta] {
     @transient private var seen: ValueState[Long] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      seen = getHandle.getValueState[Long]("seen", longEnc, ttl)
+      seen = getHandle.getValueState[Long]("seen", longEnc, TTLConfig.NONE)
 
     override def handleInputRows(key: String, rows: Iterator[(String, String, Long)],
         timers: TimerValues): Iterator[ChunkDelta] = {
@@ -73,28 +72,14 @@ object ChunkStream {
   }
 
   /** Maintain the chunk ledger at `table` from a document stream carrying
-    * `source` and `text`. Requires the RocksDB state store provider
-    * (unbounded (source, fp)-grain state). */
-  def maintain(docs: DataFrame, table: String,
-      checkpoint: Option[String] = None,
-      ttl: TTLConfig = TTLConfig.NONE): StreamingQuery = {
-    val timeMode = if (ttl == TTLConfig.NONE) TimeMode.None()
-      else TimeMode.ProcessingTime()
-    val deltas = graft.operators.Dedup.cdcChunks(docs)
+    * `source` and `text`; a retried epoch rewrites its own partition
+    * ([[DeltaLogSink.epochOverwrite]]). */
+  def maintain(docs: DataFrame, table: String): StreamingQuery = {
+    val grouped = graft.operators.Dedup.cdcChunks(docs)
       .as[(String, String, Long)]
       .groupByKey(r => r._1 + "\n" + r._2)
-      .transformWithState(new ChunkStoreProcessor(ttl), timeMode, OutputMode.Update())
-    val writer0 = deltas.writeStream
-      // epoch-partition overwrite: a retried epoch rewrites identical
-      // content (DeltaLogSink pattern 1; one action per batch — the old
-      // isEmpty probe ran the whole stateful plan twice, ADVICE r11)
-      .foreachBatch(DeltaLogSink.epochOverwrite[ChunkDelta](table) _)
-      .outputMode("update")
-    // pace TTL (ProcessingTime) mode — see IndexStream.maintain
-    val writer = if (ttl == TTLConfig.NONE) writer0
-      else writer0.trigger(org.apache.spark.sql.streaming.Trigger
-        .ProcessingTime("100 milliseconds"))
-    checkpoint.fold(writer)(c => writer.option("checkpointLocation", c)).start()
+    DeltaLogSink.maintainKeyed(grouped, new ChunkStoreProcessor, table)(
+      DeltaLogSink.epochOverwrite[ChunkDelta])
   }
 
   /** Current savings report over the delta log — q220's own closing pass:

@@ -4,8 +4,8 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
-  StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
+  TimerValues, TTLConfig, ValueState}
 
 /** True Structured Streaming forms of the reference's stateful semantics
   * (SURVEY.md §2A A10–A12, A17; §2B B25–B30). The batch twins in
@@ -14,13 +14,13 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * the same fixture fed through MemoryStream in multiple microbatches.
   *
   * 100 TB notes: state is keyed on the composite document key, so state
-  * distribution = shuffle partitioning on that key; the production config
-  * swaps the default in-memory state store for RocksDB
-  * (`spark.sql.streaming.stateStore.providerClass`) since latest-state
-  * over all documents is unbounded; per-shard arrival order maps to
-  * per-partition order, and both stateful ops fold their per-batch group
-  * in (event-time, seq) order so cross-shard interleaving cannot corrupt
-  * state (the user-guide.md:125-139 gotcha).
+  * distribution = shuffle partitioning on that key; both stateful ops
+  * are `transformWithState` processors on the RocksDB state store
+  * ([[graft.Session]] sets it), since latest-state over all documents is
+  * unbounded; per-shard arrival order maps to per-partition order, and
+  * both fold their per-batch group in (event-time, seq) order so
+  * cross-shard interleaving cannot corrupt state (the
+  * user-guide.md:125-139 gotcha).
   */
 object ContentStream {
 
@@ -57,12 +57,6 @@ object ContentStream {
     * foreign CMS" feed, user-guide.md:3). Rows fold in event-time order
     * on top of prior state; a full-state record only wins if strictly
     * newer (replacement semantics, user-guide.md:17,72).
-    *
-    * transformWithState requires the RocksDB state store provider —
-    * exactly the production config SCALE.md prescribes for unbounded
-    * latest-state. (This op was born on flatMapGroupsWithState and
-    * migrated; the legacy-API pattern stays exercised by
-    * [[publishTransitions]], which documents the contrast.)
     *
     * `ttl` is the retention policy for per-key state (the reference is
     * silent on it, so it is an explicit deployment decision): NONE keeps
@@ -101,40 +95,47 @@ object ContentStream {
   }
 
   def latestState(ds: Dataset[EnvelopeRow],
-      ttl: TTLConfig = TTLConfig.NONE): Dataset[StateChange] = {
-    // state TTL is a processing-time feature: a non-NONE ttl needs the
-    // ProcessingTime time mode, NONE runs without a clock at all
-    val timeMode = if (ttl == TTLConfig.NONE) TimeMode.None() else TimeMode.ProcessingTime()
+      ttl: TTLConfig = TTLConfig.NONE): Dataset[StateChange] =
     ds.groupByKey(e => DocKey(e.id, e.branch, e.published))
-      .transformWithState(new LatestStateProcessor(ttl), timeMode, OutputMode.Update())
-  }
+      .transformWithState(new LatestStateProcessor(ttl), DeltaLogSink.timeMode(ttl),
+        OutputMode.Update())
 
   /** A12 streaming: publish/unpublish transition detection — keyed on
     * (id, branch), tracking existence of the published=true copy
     * (user-guide.md:141-143; note the key differs from latestState's,
-    * the documented conflation trap). */
+    * the documented conflation trap). One ValueState per key: whether the
+    * copy exists, and the (date, seq) of the newest record folded in, so
+    * an older record arriving late changes nothing. */
+  class PublishProcessor extends StatefulProcessor[PubKey, EnvelopeRow, PubEvent] {
+    @transient private var state: ValueState[PubState] = _
+
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      state = getHandle.getValueState[PubState]("pubState", pubStateEnc, TTLConfig.NONE)
+
+    override def handleInputRows(key: PubKey, rows: Iterator[EnvelopeRow],
+        timers: TimerValues): Iterator[PubEvent] = {
+      var st = if (state.exists()) state.get() else PubState(exists = false, "", Long.MinValue)
+      val out = Vector.newBuilder[PubEvent]
+      rows.toSeq.sortBy(e => (e.date.getTime, e.seq)).foreach { e =>
+        val newer = Ordering[(Long, String)].gt((e.date.getTime, e.seq), (st.lastDateMs, st.lastSeq))
+        if (newer) {
+          val isInsert = e.operation.startsWith("insert")
+          if (isInsert && !st.exists)
+            out += PubEvent(key.id, key.branch, "publish", e.seq, e.date)
+          else if (!isInsert && st.exists)
+            out += PubEvent(key.id, key.branch, "unpublish", e.seq, e.date)
+          st = PubState(exists = isInsert, e.seq, e.date.getTime)
+        }
+      }
+      state.update(st)
+      out.result().iterator
+    }
+  }
+
   def publishTransitions(ds: Dataset[EnvelopeRow]): Dataset[PubEvent] =
     ds.filter(_.published)
       .groupByKey(e => PubKey(e.id, e.branch))
-      .flatMapGroupsWithState[PubState, PubEvent](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: PubKey, rows: Iterator[EnvelopeRow], state: GroupState[PubState]) =>
-          var st = state.getOption.getOrElse(PubState(exists = false, "", Long.MinValue))
-          val out = Vector.newBuilder[PubEvent]
-          rows.toSeq.sortBy(e => (e.date.getTime, e.seq)).foreach { e =>
-            val newer = Ordering[(Long, String)].gt((e.date.getTime, e.seq), (st.lastDateMs, st.lastSeq))
-            if (newer) {
-              val isInsert = e.operation.startsWith("insert")
-              if (isInsert && !st.exists)
-                out += PubEvent(key.id, key.branch, "publish", e.seq, e.date)
-              else if (!isInsert && st.exists)
-                out += PubEvent(key.id, key.branch, "unpublish", e.seq, e.date)
-              st = PubState(exists = isInsert, e.seq, e.date.getTime)
-            }
-          }
-          state.update(st)
-          out.result().iterator
-      }
+      .transformWithState(new PublishProcessor, TimeMode.None(), OutputMode.Append())
 
   /** A17 streaming: windowed publish analytics — watermarked hourly
     * tumbling counts of publish-proxy events by content type

@@ -1,11 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, KeyValueGroupedDataset,
+  Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, StreamingQuery,
+  TimeMode, Trigger, TTLConfig}
 
-/** The shared sink discipline of the streaming twins — the four
-  * idempotency patterns every maintained operator uses, each written
+/** The shared sink discipline of the streaming twins — the idempotency
+  * patterns every maintained operator uses, each written
   * (and tested, DeltaLogSinkSpec, GridSwapSpec, SumMergeRecoverySpec)
   * in exactly one place instead of once per twin:
   *
@@ -33,6 +35,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *     everything streamed so far: each batch merges its delta into the
   *     table and swaps the result in, stamped with its batchId. The 16
   *     sum-merge twins (GridStream, StatsStream, ...) are each one call.
+  *  5. [[maintainKeyed]] — a keyed `transformWithState` processor whose
+  *     per-batch output lands through pattern 1 or 2. The five keyed
+  *     twins (IndexStream, ChunkStream, LmStream, ViewStream, LshStream)
+  *     are each one call; [[timeMode]] is the one TTL rule every keyed
+  *     processor in the package runs by.
   *
   * Production swaps the log+view for a transactional MERGE table; the
   * contract — retries rewrite, replays add nothing, the view is a pure
@@ -115,6 +122,32 @@ object DeltaLogSink {
         }
       }
       .outputMode("append").start()
+
+  /** The time mode of a keyed processor with per-key state `ttl`: state
+    * TTL is a processing-time feature, so a non-NONE ttl needs the
+    * ProcessingTime mode, and NONE runs without a clock at all. */
+  private[streaming] def timeMode(ttl: TTLConfig): TimeMode =
+    if (ttl == TTLConfig.NONE) TimeMode.None() else TimeMode.ProcessingTime()
+
+  /** Pattern 5: run `processor` over `grouped` in Update mode and land
+    * each micro-batch of its output in `table` through `sink`
+    * ([[epochOverwrite]] or [[appendIfNonEmpty]]). The checkpoint lives at
+    * `<table>.ckpt`, as in [[maintain]], so a restart resumes the keyed
+    * state together with the log it feeds. Under a TTL the query runs in
+    * [[timeMode]]'s ProcessingTime mode, which schedules a micro-batch
+    * every trigger (timers could fire): the trigger is paced at 100 ms
+    * so an idle stream does not busy-loop empty batches. */
+  def maintainKeyed[K, V, U: Encoder](grouped: KeyValueGroupedDataset[K, V],
+      processor: StatefulProcessor[K, V, U], table: String, ttl: TTLConfig = TTLConfig.NONE)
+      (sink: String => (Dataset[U], Long) => Unit): StreamingQuery =
+    grouped.transformWithState(processor, timeMode(ttl), OutputMode.Update())
+      .writeStream
+      .option("checkpointLocation", table + ".ckpt")
+      .foreachBatch(sink(table))
+      .outputMode("update")
+      // 0 ms is the default trigger: a batch as soon as the last one ends
+      .trigger(Trigger.ProcessingTime(if (ttl == TTLConfig.NONE) 0L else 100L))
+      .start()
 
   /** The merge [[maintain]] applies per batch, shared with batch queries
     * that fold a delta into a stored aggregate (q120). */

@@ -71,11 +71,9 @@ object EdgeStream {
   def transitions(events: Dataset[Ev],
       ttl: TTLConfig = TTLConfig.NONE): Dataset[Hop] = {
     import events.sparkSession.implicits._
-    // state TTL is a processing-time feature: a non-NONE ttl needs the
-    // ProcessingTime time mode, NONE runs without a clock at all
-    val timeMode = if (ttl == TTLConfig.NONE) TimeMode.None() else TimeMode.ProcessingTime()
     events.groupByKey(_.user_id)
-      .transformWithState(new TransitionsProcessor(ttl), timeMode, OutputMode.Append())
+      .transformWithState(new TransitionsProcessor(ttl), DeltaLogSink.timeMode(ttl),
+        OutputMode.Append())
   }
 
   /** Maintain the (src, dst, ew) edge-count table from a hop stream:

@@ -79,31 +79,17 @@ object IndexStream {
   }
 
   /** Maintain the `(fp, first_doc)` index at `table` (append-only delta
-    * log) from a document stream carrying `doc_id` and `text`. Requires
-    * the RocksDB state store provider (unbounded fp-grain state). */
+    * log) from a document stream carrying `doc_id` and `text`. A fully
+    * replayed batch emits zero updates and appends nothing
+    * ([[DeltaLogSink.appendIfNonEmpty]]). */
   def maintain(docs: DataFrame, table: String,
-      checkpoint: Option[String] = None,
       ttl: TTLConfig = TTLConfig.NONE): StreamingQuery = {
-    val timeMode = if (ttl == TTLConfig.NONE) TimeMode.None()
-      else TimeMode.ProcessingTime()
-    val deltas = graft.operators.Dedup.fpProjected(docs)
+    val grouped = graft.operators.Dedup.fpProjected(docs)
       .select(col("fp"), col("doc_id").cast("long").as("first_doc"))
       .as[(String, Long)]
       .groupByKey(_._1)
-      .transformWithState(new MinIndexProcessor(ttl), timeMode, OutputMode.Update())
-    val writer0 = deltas.writeStream
-      // a fully-replayed batch emits zero updates and appends nothing;
-      // the sink persists the delta so the probe + write share one
-      // execution of the stateful plan (DeltaLogSink pattern 2)
-      .foreachBatch(DeltaLogSink.appendIfNonEmpty[FpUpdate](table) _)
-      .outputMode("update")
-    // ProcessingTime mode schedules a micro-batch EVERY trigger (TTL
-    // timers could fire), so the default as-fast-as-possible trigger
-    // busy-loops empty batches; pace it (the ContentStream TTL lesson)
-    val writer = if (ttl == TTLConfig.NONE) writer0
-      else writer0.trigger(org.apache.spark.sql.streaming.Trigger
-        .ProcessingTime("100 milliseconds"))
-    checkpoint.fold(writer)(c => writer.option("checkpointLocation", c)).start()
+    DeltaLogSink.maintainKeyed(grouped, new MinIndexProcessor(ttl), table, ttl)(
+      DeltaLogSink.appendIfNonEmpty[FpUpdate])
   }
 
   /** Current index view over the delta log: min-reduce (idempotent, so

@@ -56,10 +56,9 @@ object LmStream {
   }
 
   /** Maintain the bigram count table at `table` from a document stream
-    * carrying a `text` column. Requires the RocksDB state store. */
-  def maintain(docs: DataFrame, table: String,
-      checkpoint: Option[String] = None): StreamingQuery = {
-    val out = docs
+    * carrying a `text` column. */
+  def maintain(docs: DataFrame, table: String): StreamingQuery = {
+    val grouped = docs
       .withColumn("toks", split(col("text"), " "))
       .filter(size(col("toks")) >= 2)
       .select(explode(expr(
@@ -71,11 +70,8 @@ object LmStream {
       // the state store is still touched once per DISTINCT bigram
       .as[(String, Long)]
       .groupByKey(_._1)
-      .transformWithState(new CountProcessor, TimeMode.None(), OutputMode.Update())
-    val writer = out.writeStream
-      .foreachBatch(DeltaLogSink.epochOverwrite[CountRow](table) _)
-      .outputMode("update")
-    checkpoint.fold(writer)(c => writer.option("checkpointLocation", c)).start()
+    DeltaLogSink.maintainKeyed(grouped, new CountProcessor, table)(
+      DeltaLogSink.epochOverwrite[CountRow])
   }
 
   /** Current (bg, n) count table: each bigram's latest epoch row. */

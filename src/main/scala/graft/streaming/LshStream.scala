@@ -11,7 +11,8 @@ import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor,
   * buckets PROBES the bucket's admitted members (emitting candidate
   * pairs for the q43-style verifier) and is ADMITTED iff the bucket
   * still has room — per-arrival cost and per-bucket state both bounded
-  * by the cap, whatever the bucket's eventual (Zipf-guaranteed) heat.
+  * by the cap (`Dedup.MaxBucket`, the cap batch q272 admits by),
+  * whatever the bucket's eventual (Zipf-guaranteed) heat.
   *
   * Why this is the online form of blocking: the batch guard
   * (`Guards.capBuckets`) drops a hot bucket wholesale, a decision that
@@ -45,12 +46,13 @@ object LshStream {
 
   private val longEnc: Encoder[Long] = Encoders.scalaLong
 
-  /** Probe-then-admit per bucket. In-batch arrivals are folded in
-    * doc_id order (the ingest order the equality contract assumes);
-    * re-arrivals of an already-admitted doc re-emit their pairs (an
-    * at-least-once replay) but are not re-admitted — the distinct read
-    * view absorbs the duplicates. */
-  class AdmitProcessor(cap: Int)
+  /** Probe-then-admit per bucket, admitting at most `Dedup.MaxBucket`
+    * members — any other cap would break stream ≡ batch. In-batch
+    * arrivals are folded in doc_id order (the ingest order the equality
+    * contract assumes); re-arrivals of an already-admitted doc re-emit
+    * their pairs (an at-least-once replay) but are not re-admitted — the
+    * distinct read view absorbs the duplicates. */
+  class AdmitProcessor
       extends StatefulProcessor[String, (String, Long), CandPair] {
     @transient private var members: ListState[Long] = _
 
@@ -70,7 +72,7 @@ object LshStream {
         admitted.foreach { m =>
           if (m < d) out += CandPair(m, d, key)
         }
-        if (admitted.size < cap && !admitted.contains(d)) {
+        if (admitted.size < graft.operators.Dedup.MaxBucket && !admitted.contains(d)) {
           admitted = admitted :+ d
           members.appendValue(d)
         }
@@ -80,20 +82,15 @@ object LshStream {
   }
 
   /** Maintain the candidate-pair log at `table` from a document stream
-    * carrying `doc_id`, `text`. Requires the RocksDB state store
-    * provider (bucket-grain list state). */
-  def maintain(docs: DataFrame, table: String,
-      checkpoint: Option[String] = None, cap: Int = 256): StreamingQuery = {
+    * carrying `doc_id`, `text`. */
+  def maintain(docs: DataFrame, table: String): StreamingQuery = {
     import docs.sparkSession.implicits._
-    val pairs = graft.operators.Dedup.bandRowsOf(docs)
+    val grouped = graft.operators.Dedup.bandRowsOf(docs)
       .select(col("bucket"), col("doc_id"))
       .as[(String, Long)]
       .groupByKey(_._1)
-      .transformWithState(new AdmitProcessor(cap), TimeMode.None(), OutputMode.Update())
-    val writer = pairs.writeStream
-      .foreachBatch(DeltaLogSink.appendIfNonEmpty[CandPair](table) _)
-      .outputMode("update")
-    checkpoint.fold(writer)(c => writer.option("checkpointLocation", c)).start()
+    DeltaLogSink.maintainKeyed(grouped, new AdmitProcessor, table)(
+      DeltaLogSink.appendIfNonEmpty[CandPair])
   }
 
   /** Candidate view over the log: distinct (idempotent under replayed

@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor,
-  TimeMode, TimerValues, TTLConfig}
+  TimeMode, TimerValues, TTLConfig, ValueState}
 
 /** True Structured Streaming form of q113's rolling per-entity anomaly
   * flag (`operators/ScaleOps`): a `transformWithState` processor holding a
@@ -137,42 +137,48 @@ object MetricStream {
   private implicit val convStateEnc: Encoder[ConvState] = Encoders.product[ConvState]
 
   /** Streaming twin of q124 (`operators/StreamSemantics.q124Gaps`): live
-    * first-view→first-purchase conversion tracking. State per user is TWO
-    * epoch-micro minima (+ an update counter) — constant-size, RocksDB-
-    * resident, no event history kept — and every update re-derives the
-    * verdict from the minima, so out-of-order arrivals self-correct: an
-    * earlier purchase landing late can lower the gap, or even REVOKE a
-    * conversion (first purchase before first view), which is why updates
-    * carry `converted` instead of only emitting gaps. The latest update
-    * per user therefore equals the batch q124Gaps row (or its absence)
-    * over everything ingested — exact convergence, proven in
-    * StreamingSpec across multiple microbatches.
+    * first-view→first-purchase conversion tracking. State per user is one
+    * ValueState of TWO epoch-micro minima (+ an update counter) —
+    * constant-size, RocksDB-resident, no event history kept — and every
+    * update re-derives the verdict from the minima, so out-of-order
+    * arrivals self-correct: an earlier purchase landing late can lower
+    * the gap, or even REVOKE a conversion (first purchase before first
+    * view), which is why updates carry `converted` instead of only
+    * emitting gaps. The latest update per user therefore equals the
+    * batch q124Gaps row (or its absence) over everything ingested —
+    * exact convergence, proven in StreamingSpec across multiple
+    * microbatches.
     */
-  def conversions(events: Dataset[ConvEvent]): Dataset[ConvUpdate] = {
-    import org.apache.spark.sql.streaming.GroupStateTimeout
-    events
-      .groupByKey(_.userId)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (uid: Long, it: Iterator[ConvEvent],
-         state: org.apache.spark.sql.streaming.GroupState[ConvState]) =>
-          val st0 = state.getOption.getOrElse(ConvState(Long.MaxValue, Long.MaxValue, 0L))
-          var mv = st0.minView
-          var mb = st0.minBuy
-          var n = st0.nSeen
-          it.foreach { e =>
-            val us = e.ts.getTime / 1000L * 1000000L + e.ts.getNanos / 1000L
-            n += 1
-            if (e.eventType == "view") mv = math.min(mv, us)
-            else if (e.eventType == "purchase") mb = math.min(mb, us)
-          }
-          if (mv == st0.minView && mb == st0.minBuy && n == st0.nSeen)
-            Iterator.empty
-          else {
-            state.update(ConvState(mv, mb, n))
-            val conv = mv != Long.MaxValue && mb != Long.MaxValue && mb >= mv
-            Iterator.single(
-              ConvUpdate(uid, conv, if (conv) (mb - mv) / 1000000L else -1L, n))
-          }
+  class ConversionProcessor extends StatefulProcessor[Long, ConvEvent, ConvUpdate] {
+    @transient private var state: ValueState[ConvState] = _
+
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      state = getHandle.getValueState[ConvState]("conv", convStateEnc, TTLConfig.NONE)
+
+    override def handleInputRows(uid: Long, it: Iterator[ConvEvent],
+        timers: TimerValues): Iterator[ConvUpdate] = {
+      val st0 = if (state.exists()) state.get() else ConvState(Long.MaxValue, Long.MaxValue, 0L)
+      var mv = st0.minView
+      var mb = st0.minBuy
+      var n = st0.nSeen
+      it.foreach { e =>
+        val us = e.ts.getTime / 1000L * 1000000L + e.ts.getNanos / 1000L
+        n += 1
+        if (e.eventType == "view") mv = math.min(mv, us)
+        else if (e.eventType == "purchase") mb = math.min(mb, us)
       }
+      if (mv == st0.minView && mb == st0.minBuy && n == st0.nSeen)
+        Iterator.empty
+      else {
+        state.update(ConvState(mv, mb, n))
+        val conv = mv != Long.MaxValue && mb != Long.MaxValue && mb >= mv
+        Iterator.single(
+          ConvUpdate(uid, conv, if (conv) (mb - mv) / 1000000L else -1L, n))
+      }
+    }
   }
+
+  def conversions(events: Dataset[ConvEvent]): Dataset[ConvUpdate] =
+    events.groupByKey(_.userId)
+      .transformWithState(new ConversionProcessor, TimeMode.None(), OutputMode.Update())
 }

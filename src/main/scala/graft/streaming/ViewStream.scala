@@ -70,22 +70,15 @@ object ViewStream {
   }
 
   /** Maintain the view at `table` from a signed delta stream carrying
-    * `o_custkey`, `seg`, `cents`, `sgn` (∈ {+1, −1}). Requires the
-    * RocksDB state store provider. */
-  def maintain(deltas: DataFrame, table: String,
-      checkpoint: Option[String] = None): StreamingQuery = {
-    val out = deltas
+    * `o_custkey`, `seg`, `cents`, `sgn` (∈ {+1, −1}). */
+  def maintain(deltas: DataFrame, table: String): StreamingQuery = {
+    val grouped = deltas
       .select(col("o_custkey").cast("long"), col("seg"),
         col("cents").cast("long"), col("sgn").cast("long"))
       .as[(Long, String, Long, Long)]
       .groupByKey(_._1)
-      .transformWithState(new ViewProcessor, TimeMode.None(), OutputMode.Update())
-    val writer = out.writeStream
-      // epoch-partition overwrite (DeltaLogSink pattern 1; one action
-      // per batch — the old isEmpty probe ran the stateful plan twice)
-      .foreachBatch(DeltaLogSink.epochOverwrite[ViewRow](table) _)
-      .outputMode("update")
-    checkpoint.fold(writer)(c => writer.option("checkpointLocation", c)).start()
+    DeltaLogSink.maintainKeyed(grouped, new ViewProcessor, table)(
+      DeltaLogSink.epochOverwrite[ViewRow])
   }
 
   /** Current (k, seg, n, cents) view: each key's latest epoch row, minus

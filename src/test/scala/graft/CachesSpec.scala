@@ -34,4 +34,41 @@ class CachesSpec extends SparkSpec {
     assert(Caches.liveCount > 0, "post-release reuse did not re-persist the envelope")
     Caches.release()
   }
+
+  test("persisting an already cached plan logs no warning, and release still drops the cache") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import org.apache.spark.storage.StorageLevel
+    Caches.release()
+    spark.catalog.clearCache()
+    val warned = new java.util.concurrent.atomic.AtomicInteger()
+    val appender = new AbstractAppender("caches-spec", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getMessage.getFormattedMessage.contains("Asked to cache already cached data"))
+          warned.incrementAndGet()
+    }
+    appender.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    root.addAppender(appender)
+    val (first, second) = try {
+      val builds = (contentops.ContentOps.envelopeWithBody(spark),
+        contentops.ContentOps.envelopeWithBody(spark))
+      assert(warned.get === 0, "Caches.persist re-persisted an already cached plan")
+      // the appender does see the warning: a raw persist of the cached
+      // plan logs it
+      builds._1.persist()
+      assert(warned.get === 1, "the appender missed the CacheManager warning")
+      builds
+    } finally {
+      root.removeAppender(appender)
+      appender.stop()
+    }
+    assert(first.storageLevel === StorageLevel.MEMORY_AND_DISK)
+    assert(Caches.liveCount === 2, "both builds must be registered for release()")
+    Caches.release()
+    assert(first.storageLevel === StorageLevel.NONE, "release() left the envelope cached")
+    assert(second.storageLevel === StorageLevel.NONE)
+  }
 }

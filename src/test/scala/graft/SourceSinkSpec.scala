@@ -148,10 +148,7 @@ class SourceSinkSpec extends SparkSpec {
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     val table = Files.createTempDirectory("graft_mview").toString + "/state"
-    // latestState runs on transformWithState → RocksDB provider required;
     // explicit checkpoint so stop() can't race an in-flight commit
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ms = MemoryStream[EnvelopeRow]
     val query = ContentStream.latestState(ms.toDS())
       .writeStream
@@ -191,10 +188,7 @@ class SourceSinkSpec extends SparkSpec {
         .select("id", "branch", "published", "last_seq")
       assert(got.exceptAll(want).count() === 0)
       assert(want.exceptAll(got).count() === 0)
-    } finally {
-      try query.stop()
-      finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
+    } finally query.stop()
   }
 
   test("foreachBatch sink: microbatches land transactionally with batch ids") {

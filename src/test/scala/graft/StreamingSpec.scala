@@ -31,27 +31,23 @@ class StreamingSpec extends SparkSpec {
   test("latest-state (transformWithState, RocksDB store) converges to the batch q52 result") {
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val ms = MemoryStream[EnvelopeRow]
+    val query = ContentStream.latestState(ms.toDS())
+      .writeStream.format("memory").queryName("tws_sink").outputMode("update")
+      .option("checkpointLocation", ckpt()).start()
     try {
-      val ms = MemoryStream[EnvelopeRow]
-      val query = ContentStream.latestState(ms.toDS())
-        .writeStream.format("memory").queryName("tws_sink").outputMode("update")
-        .option("checkpointLocation", ckpt()).start()
-      try {
-        envRows.grouped(100).foreach { chunk => ms.addData(chunk); query.processAllAvailable() }
-        val w = Window.partitionBy("id", "branch", "published")
-          .orderBy(desc("lastDate"), desc("lastSeq"))
-        val got = spark.table("tws_sink")
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1 && !col("deleted"))
-          .select(col("id"), col("branch"), col("published"), col("lastSeq").as("last_seq"))
-        val want = ContentOps.queries("q52_latest_state")(spark, sf)
-          .select("id", "branch", "published", "last_seq")
-        assert(got.exceptAll(want).count() === 0)
-        assert(want.exceptAll(got).count() === 0)
-      } finally query.stop()
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      envRows.grouped(100).foreach { chunk => ms.addData(chunk); query.processAllAvailable() }
+      val w = Window.partitionBy("id", "branch", "published")
+        .orderBy(desc("lastDate"), desc("lastSeq"))
+      val got = spark.table("tws_sink")
+        .withColumn("rn", row_number().over(w))
+        .filter(col("rn") === 1 && !col("deleted"))
+        .select(col("id"), col("branch"), col("published"), col("lastSeq").as("last_seq"))
+      val want = ContentOps.queries("q52_latest_state")(spark, sf)
+        .select("id", "branch", "published", "last_seq")
+      assert(got.exceptAll(want).count() === 0)
+      assert(want.exceptAll(got).count() === 0)
+    } finally query.stop()
   }
 
   test("ANS-schema gate as a streaming wire stage converges to batch q365") {
@@ -98,75 +94,67 @@ class StreamingSpec extends SparkSpec {
     // production.
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val ms = MemoryStream[(Int, String, Array[Byte])]
+    val wire = ms.toDF().toDF("shard", "seq", "payload")
+    val ds = ContentOps.envelopeFromWire(spark, wire)
+      .select(col("seq"), col("operation"),
+        col("date").cast("timestamp").as("date"), col("id"), col("branch"),
+        col("published"), col("created"),
+        coalesce(col("headline"), lit("")).as("headline"),
+        coalesce(col("word_count"), lit(0)).as("wordCount"))
+      .as[EnvelopeRow]
+    val query = ContentStream.latestState(ds)
+      .writeStream.format("memory").queryName("chain_sink").outputMode("update")
+      .option("checkpointLocation", ckpt()).start()
     try {
-      val ms = MemoryStream[(Int, String, Array[Byte])]
-      val wire = ms.toDF().toDF("shard", "seq", "payload")
-      val ds = ContentOps.envelopeFromWire(spark, wire)
-        .select(col("seq"), col("operation"),
-          col("date").cast("timestamp").as("date"), col("id"), col("branch"),
-          col("published"), col("created"),
-          coalesce(col("headline"), lit("")).as("headline"),
-          coalesce(col("word_count"), lit(0)).as("wordCount"))
-        .as[EnvelopeRow]
-      val query = ContentStream.latestState(ds)
-        .writeStream.format("memory").queryName("chain_sink").outputMode("update")
-        .option("checkpointLocation", ckpt()).start()
-      try {
-        Fixture.wireRecords.map(w => (w.shard, w.seq, w.payload)).grouped(7)
-          .foreach { chunk => ms.addData(chunk); query.processAllAvailable() }
-        val w = Window.partitionBy("id", "branch", "published")
-          .orderBy(desc("lastDate"), desc("lastSeq"))
-        val got = spark.table("chain_sink")
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1 && !col("deleted"))
-          .select(col("id"), col("branch"), col("published"), col("lastSeq").as("last_seq"))
-        val want = ContentOps.queries("q52_latest_state")(spark, sf)
-          .select("id", "branch", "published", "last_seq")
-        assert(got.exceptAll(want).count() === 0, "chain state not in batch q52")
-        assert(want.exceptAll(got).count() === 0, "batch q52 state not in chain")
-      } finally query.stop()
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      Fixture.wireRecords.map(w => (w.shard, w.seq, w.payload)).grouped(7)
+        .foreach { chunk => ms.addData(chunk); query.processAllAvailable() }
+      val w = Window.partitionBy("id", "branch", "published")
+        .orderBy(desc("lastDate"), desc("lastSeq"))
+      val got = spark.table("chain_sink")
+        .withColumn("rn", row_number().over(w))
+        .filter(col("rn") === 1 && !col("deleted"))
+        .select(col("id"), col("branch"), col("published"), col("lastSeq").as("last_seq"))
+      val want = ContentOps.queries("q52_latest_state")(spark, sf)
+        .select("id", "branch", "published", "last_seq")
+      assert(got.exceptAll(want).count() === 0, "chain state not in batch q52")
+      assert(want.exceptAll(got).count() === 0, "batch q52 state not in chain")
+    } finally query.stop()
   }
 
   test("transformWithState TTL expires latest-state: a stale record resurrects after expiry") {
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    // TTL forces TimeMode.ProcessingTime, where the engine schedules a
+    // microbatch EVERY trigger (timers could fire), so processAllAvailable
+    // and AvailableNow never "drain". Run on a slow trigger and poll the
+    // sink with a hard deadline instead.
+    val ms = MemoryStream[EnvelopeRow]
+    val query = ContentStream.latestState(ms.toDS(),
+        org.apache.spark.sql.streaming.TTLConfig(java.time.Duration.ofMillis(500)))
+      .writeStream.format("memory").queryName("ttl_sink").outputMode("update")
+      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("100 milliseconds"))
+      .option("checkpointLocation", ckpt())
+      .start()
     try {
-      // TTL forces TimeMode.ProcessingTime, where the engine schedules a
-      // microbatch EVERY trigger (timers could fire), so processAllAvailable
-      // and AvailableNow never "drain". Run on a slow trigger and poll the
-      // sink with a hard deadline instead.
-      val ms = MemoryStream[EnvelopeRow]
-      val query = ContentStream.latestState(ms.toDS(),
-          org.apache.spark.sql.streaming.TTLConfig(java.time.Duration.ofMillis(500)))
-        .writeStream.format("memory").queryName("ttl_sink").outputMode("update")
-        .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("100 milliseconds"))
-        .option("checkpointLocation", ckpt())
-        .start()
-      try {
-        def awaitSeq(seq: String, what: String): Unit = {
-          val deadline = System.currentTimeMillis + 30000
-          while (!spark.table("ttl_sink").select("lastSeq").as[String].collect().contains(seq)) {
-            if (System.currentTimeMillis > deadline) fail(s"$what (seq $seq never surfaced)")
-            Thread.sleep(200)
-          }
+      def awaitSeq(seq: String, what: String): Unit = {
+        val deadline = System.currentTimeMillis + 30000
+        while (!spark.table("ttl_sink").select("lastSeq").as[String].collect().contains(seq)) {
+          if (System.currentTimeMillis > deadline) fail(s"$what (seq $seq never surfaced)")
+          Thread.sleep(200)
         }
-        val newer = EnvelopeRow(Fixture.seqStr(10), "insert-story", new Timestamp(2000000L),
-          "TTLDOC", "default", published = true, created = true, "h10", 100)
-        val older = EnvelopeRow(Fixture.seqStr(5), "insert-story", new Timestamp(1000000L),
-          "TTLDOC", "default", published = true, created = true, "h5", 100)
-        ms.addData(Seq(newer)); awaitSeq(Fixture.seqStr(10), "first record not materialized")
-        Thread.sleep(1500) // well past the 500 ms TTL
-        // with live state the older record would be suppressed (not newer);
-        // its emission proves the key's state expired and was rebuilt
-        ms.addData(Seq(older))
-        awaitSeq(Fixture.seqStr(5), "state survived past its TTL: the stale record was suppressed")
-      } finally query.stop()
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      }
+      val newer = EnvelopeRow(Fixture.seqStr(10), "insert-story", new Timestamp(2000000L),
+        "TTLDOC", "default", published = true, created = true, "h10", 100)
+      val older = EnvelopeRow(Fixture.seqStr(5), "insert-story", new Timestamp(1000000L),
+        "TTLDOC", "default", published = true, created = true, "h5", 100)
+      ms.addData(Seq(newer)); awaitSeq(Fixture.seqStr(10), "first record not materialized")
+      Thread.sleep(1500) // well past the 500 ms TTL
+      // with live state the older record would be suppressed (not newer);
+      // its emission proves the key's state expired and was rebuilt
+      ms.addData(Seq(older))
+      awaitSeq(Fixture.seqStr(5), "state survived past its TTL: the stale record was suppressed")
+    } finally query.stop()
   }
 
   test("streaming session_window aggregation converges to the batch sessionized() form") {
@@ -203,7 +191,7 @@ class StreamingSpec extends SparkSpec {
     } finally query.stop()
   }
 
-  test("flatMapGroupsWithState publish transitions equal the batch q54 events") {
+  test("transformWithState publish transitions equal the batch q54 events") {
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     val ms = MemoryStream[EnvelopeRow]
@@ -372,8 +360,8 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("transformWithState restart-from-checkpoint: RocksDB state survives, zero re-emissions") {
-    // r13 verdict task 4: state-store RECOVERY for a transformWithState
-    // twin, not just the fMGWS one above — at 100 TB the latest-state
+    // r13 verdict task 4: state-store RECOVERY for latest-state, not
+    // just for publishTransitions above — at 100 TB the latest-state
     // store is RocksDB-backed and executor loss is routine, so "restart
     // on the same checkpoint resumes the fold mid-stream" is the
     // production claim. latestState emits in Update mode (no file sink),
@@ -382,48 +370,44 @@ class StreamingSpec extends SparkSpec {
     // because the checkpoint owns it.
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val ckptDir = ckpt()
+    val out = java.nio.file.Files.createTempDirectory("graft_twsout").toString
+    val ms = MemoryStream[EnvelopeRow]
+    def start() = ContentStream.latestState(ms.toDS()).toDF()
+      .writeStream
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
+        batch.withColumn("batch_id", lit(bid))
+          .write.mode("append").parquet(out)
+      }
+      .option("checkpointLocation", ckptDir).outputMode("update").start()
+
+    val q1 = start()
+    envRows.take(150).grouped(50).foreach { c => ms.addData(c); q1.processAllAvailable() }
+    q1.stop()
+    val afterHalf = spark.read.parquet(out).count()
+    assert(afterHalf > 0L)
+
+    val q2 = start() // same checkpoint → committed offsets + RocksDB state
     try {
-      val ckptDir = ckpt()
-      val out = java.nio.file.Files.createTempDirectory("graft_twsout").toString
-      val ms = MemoryStream[EnvelopeRow]
-      def start() = ContentStream.latestState(ms.toDS()).toDF()
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-          batch.withColumn("batch_id", lit(bid))
-            .write.mode("append").parquet(out)
-        }
-        .option("checkpointLocation", ckptDir).outputMode("update").start()
+      // drain with NO new data first: a restart must not replay
+      // committed batches — emission count stays exactly where it was
+      q2.processAllAvailable()
+      assert(spark.read.parquet(out).count() === afterHalf,
+        "restart re-emitted already-committed microbatches")
+      envRows.drop(150).grouped(50).foreach { c => ms.addData(c); q2.processAllAvailable() }
+    } finally q2.stop()
 
-      val q1 = start()
-      envRows.take(150).grouped(50).foreach { c => ms.addData(c); q1.processAllAvailable() }
-      q1.stop()
-      val afterHalf = spark.read.parquet(out).count()
-      assert(afterHalf > 0L)
-
-      val q2 = start() // same checkpoint → committed offsets + RocksDB state
-      try {
-        // drain with NO new data first: a restart must not replay
-        // committed batches — emission count stays exactly where it was
-        q2.processAllAvailable()
-        assert(spark.read.parquet(out).count() === afterHalf,
-          "restart re-emitted already-committed microbatches")
-        envRows.drop(150).grouped(50).foreach { c => ms.addData(c); q2.processAllAvailable() }
-      } finally q2.stop()
-
-      // the fold carried state ACROSS the restart: most-recent emission
-      // per key (batch id is the recency axis) equals the batch twin
-      val w = Window.partitionBy("id", "branch", "published").orderBy(desc("batch_id"))
-      val got = spark.read.parquet(out)
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1 && !col("deleted"))
-        .select(col("id"), col("branch"), col("published"), col("lastSeq").as("last_seq"))
-      val want = ContentOps.queries("q52_latest_state")(spark, sf)
-        .select("id", "branch", "published", "last_seq")
-      assert(got.exceptAll(want).count() === 0, "restarted fold not in batch q52")
-      assert(want.exceptAll(got).count() === 0, "batch q52 state missing from restarted fold")
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    // the fold carried state ACROSS the restart: most-recent emission
+    // per key (batch id is the recency axis) equals the batch twin
+    val w = Window.partitionBy("id", "branch", "published").orderBy(desc("batch_id"))
+    val got = spark.read.parquet(out)
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1 && !col("deleted"))
+      .select(col("id"), col("branch"), col("published"), col("lastSeq").as("last_seq"))
+    val want = ContentOps.queries("q52_latest_state")(spark, sf)
+      .select("id", "branch", "published", "last_seq")
+    assert(got.exceptAll(want).count() === 0, "restarted fold not in batch q52")
+    assert(want.exceptAll(got).count() === 0, "batch q52 state missing from restarted fold")
   }
 
   test("transformWithState disorder audit (O(1) state) converges to batch q166") {
@@ -431,35 +415,31 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     import graft.streaming.DisorderStream
     import graft.streaming.DisorderStream.WireEvent
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    // arrival order for q166 is the ingest sequence: feed event_id-sorted
+    val events = Tables.events(spark, sf)
+      .select(col("event_id").as("eventId"), col("ts"),
+        col("event_type").as("eventType"))
+      .as[WireEvent]
+      .collect().sortBy(_.eventId).toSeq
+    val ms = MemoryStream[WireEvent]
+    val query = DisorderStream.disorder(ms.toDS())
+      .writeStream.format("memory").queryName("dis_sink")
+      .option("checkpointLocation", ckpt())
+      .outputMode("append").start()
     try {
-      // arrival order for q166 is the ingest sequence: feed event_id-sorted
-      val events = Tables.events(spark, sf)
-        .select(col("event_id").as("eventId"), col("ts"),
-          col("event_type").as("eventType"))
-        .as[WireEvent]
-        .collect().sortBy(_.eventId).toSeq
-      val ms = MemoryStream[WireEvent]
-      val query = DisorderStream.disorder(ms.toDS())
-        .writeStream.format("memory").queryName("dis_sink")
-        .option("checkpointLocation", ckpt())
-        .outputMode("append").start()
-      try {
-        events.grouped(400).foreach { chunk => ms.addData(chunk); query.processAllAvailable() }
-        // last emitted row per feed = converged totals
-        val w = Window.partitionBy("eventType").orderBy(desc("nEvents"))
-        val got = spark.table("dis_sink")
-          .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-          .select(col("eventType").as("event_type"), col("nEvents").as("n_events"),
-            col("nLate").as("n_late"), expr("maxLagUs div 1000").as("max_lag_ms"))
-        val want = graft.operators.StreamSemantics
-          .queries("q166_disorder_audit")(spark, sf)
-          .select("event_type", "n_events", "n_late", "max_lag_ms")
-        assert(got.exceptAll(want).count() === 0, "streaming disorder not in batch")
-        assert(want.exceptAll(got).count() === 0, "batch disorder not in stream")
-      } finally query.stop()
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      events.grouped(400).foreach { chunk => ms.addData(chunk); query.processAllAvailable() }
+      // last emitted row per feed = converged totals
+      val w = Window.partitionBy("eventType").orderBy(desc("nEvents"))
+      val got = spark.table("dis_sink")
+        .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+        .select(col("eventType").as("event_type"), col("nEvents").as("n_events"),
+          col("nLate").as("n_late"), expr("maxLagUs div 1000").as("max_lag_ms"))
+      val want = graft.operators.StreamSemantics
+        .queries("q166_disorder_audit")(spark, sf)
+        .select("event_type", "n_events", "n_late", "max_lag_ms")
+      assert(got.exceptAll(want).count() === 0, "streaming disorder not in batch")
+      assert(want.exceptAll(got).count() === 0, "batch disorder not in stream")
+    } finally query.stop()
   }
 
   test("transformWithState rolling anomaly (bounded ListState) converges to batch q113") {
@@ -467,35 +447,31 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     import graft.streaming.MetricStream
     import graft.streaming.MetricStream.MetricEvent
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    // the stream contract is per-key arrival order; feeding the fixture
+    // globally (ts, event_id)-sorted in chunks preserves it per key
+    val events = Tables.events(spark, sf)
+      .select(col("event_id").as("eventId"), col("ts"),
+        col("user_id").as("userId"), col("event_type").as("eventType"),
+        col("value"))
+      .as[MetricEvent]
+      .collect().sortBy(e => (e.ts.getTime, e.eventId)).toSeq
+    val ms = MemoryStream[MetricEvent]
+    val query = MetricStream.rollingAnomalies(ms.toDS())
+      .writeStream.format("memory").queryName("anom_sink")
+      .outputMode("append").start()
     try {
-      // the stream contract is per-key arrival order; feeding the fixture
-      // globally (ts, event_id)-sorted in chunks preserves it per key
-      val events = Tables.events(spark, sf)
-        .select(col("event_id").as("eventId"), col("ts"),
-          col("user_id").as("userId"), col("event_type").as("eventType"),
-          col("value"))
-        .as[MetricEvent]
-        .collect().sortBy(e => (e.ts.getTime, e.eventId)).toSeq
-      val ms = MemoryStream[MetricEvent]
-      val query = MetricStream.rollingAnomalies(ms.toDS())
-        .writeStream.format("memory").queryName("anom_sink")
-        .outputMode("append").start()
-      try {
-        events.grouped(700).foreach { chunk => ms.addData(chunk); query.processAllAvailable() }
-        val got = spark.table("anom_sink")
-          .groupBy(col("eventType").as("event_type"))
-          .agg(sum(when(col("scored"), 1L).otherwise(0L)).as("n_scored"),
-            sum(when(col("anomalous"), 1L).otherwise(0L)).as("n_anomalies"),
-            sum(when(col("anomalous"), col("eventId")).otherwise(0L)).as("id_checksum"))
-        val want = graft.operators.ScaleOps.queries("q113_rolling_anomaly")(spark, sf)
-        assert(got.exceptAll(want).count() === 0, "streaming verdicts not in batch")
-        assert(want.exceptAll(got).count() === 0, "batch verdicts not in stream")
-        // every event got exactly one verdict
-        assert(spark.table("anom_sink").count() === events.size.toLong)
-      } finally query.stop()
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      events.grouped(700).foreach { chunk => ms.addData(chunk); query.processAllAvailable() }
+      val got = spark.table("anom_sink")
+        .groupBy(col("eventType").as("event_type"))
+        .agg(sum(when(col("scored"), 1L).otherwise(0L)).as("n_scored"),
+          sum(when(col("anomalous"), 1L).otherwise(0L)).as("n_anomalies"),
+          sum(when(col("anomalous"), col("eventId")).otherwise(0L)).as("id_checksum"))
+      val want = graft.operators.ScaleOps.queries("q113_rolling_anomaly")(spark, sf)
+      assert(got.exceptAll(want).count() === 0, "streaming verdicts not in batch")
+      assert(want.exceptAll(got).count() === 0, "batch verdicts not in stream")
+      // every event got exactly one verdict
+      assert(spark.table("anom_sink").count() === events.size.toLong)
+    } finally query.stop()
   }
 
   test("streaming rolling actives: closed windows converge to batch q114") {
@@ -675,34 +651,30 @@ class StreamingSpec extends SparkSpec {
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     import graft.streaming.IndexStream
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val table = java.nio.file.Files.createTempDirectory("graft_fpix").toString + "/index"
+    val rows = Tables.documents(spark, sf).select("doc_id", "text").collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("text"))).toSeq
+    val ms = MemoryStream[(Long, String)]
+    val query = IndexStream.maintain(ms.toDS().toDF("doc_id", "text"), table)
     try {
-      val table = java.nio.file.Files.createTempDirectory("graft_fpix").toString + "/index"
-      val rows = Tables.documents(spark, sf).select("doc_id", "text").collect()
-        .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("text"))).toSeq
-      val ms = MemoryStream[(Long, String)]
-      val query = IndexStream.maintain(ms.toDS().toDF("doc_id", "text"), table, Some(ckpt()))
-      try {
-        val chunks = rows.grouped(rows.size / 4 + 1).toSeq
-        chunks.foreach { chunk => ms.addData(chunk); query.processAllAvailable() }
-        def read() = IndexStream.readIndex(spark, table).collect()
-          .map(r => (r.getAs[String]("fp"), r.getAs[Long]("first_doc"))).toMap
-        def logFiles() = new java.io.File(table).listFiles()
-          .filter(_.getName.endsWith(".parquet")).map(_.getName).toSet
-        val afterAll = read()
-        val want = graft.operators.Dedup
-          .fpIndexFrom(Tables.documents(spark, sf)).collect()
-          .map(r => (r.getAs[String]("fp"), r.getAs[Long]("first_doc"))).toMap
-        assert(afterAll === want)
-        // at-least-once replay: state already holds every min, so the
-        // processor emits zero updates and the delta log gains no files
-        val before = logFiles()
-        ms.addData(chunks.head); query.processAllAvailable()
-        assert(read() === want)
-        assert(logFiles() === before, "replay appended to the delta log")
-      } finally query.stop()
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      val chunks = rows.grouped(rows.size / 4 + 1).toSeq
+      chunks.foreach { chunk => ms.addData(chunk); query.processAllAvailable() }
+      def read() = IndexStream.readIndex(spark, table).collect()
+        .map(r => (r.getAs[String]("fp"), r.getAs[Long]("first_doc"))).toMap
+      def logFiles() = new java.io.File(table).listFiles()
+        .filter(_.getName.endsWith(".parquet")).map(_.getName).toSet
+      val afterAll = read()
+      val want = graft.operators.Dedup
+        .fpIndexFrom(Tables.documents(spark, sf)).collect()
+        .map(r => (r.getAs[String]("fp"), r.getAs[Long]("first_doc"))).toMap
+      assert(afterAll === want)
+      // at-least-once replay: state already holds every min, so the
+      // processor emits zero updates and the delta log gains no files
+      val before = logFiles()
+      ms.addData(chunks.head); query.processAllAvailable()
+      assert(read() === want)
+      assert(logFiles() === before, "replay appended to the delta log")
+    } finally query.stop()
   }
 
   test("q144 twin TTL: an expired fingerprint is re-admitted as first-sight; a live one stays suppressed") {
@@ -722,8 +694,6 @@ class StreamingSpec extends SparkSpec {
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     import graft.streaming.IndexStream
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     def countDocs(table: String, doc: Long) = {
       val d = new java.io.File(table)
       if (!d.exists() || d.listFiles().forall(!_.getName.endsWith(".parquet"))) 0L
@@ -736,39 +706,35 @@ class StreamingSpec extends SparkSpec {
         Thread.sleep(200)
       }
     }
+    // phase (a): long TTL — live state suppresses, timing-immune
+    val liveTable = java.nio.file.Files.createTempDirectory("graft_fpttl_live").toString + "/index"
+    val msLive = MemoryStream[(Long, String)]
+    val live = IndexStream.maintain(msLive.toDS().toDF("doc_id", "text"), liveTable,
+      ttl = org.apache.spark.sql.streaming.TTLConfig(java.time.Duration.ofMinutes(10)))
     try {
-      // phase (a): long TTL — live state suppresses, timing-immune
-      val liveTable = java.nio.file.Files.createTempDirectory("graft_fpttl_live").toString + "/index"
-      val msLive = MemoryStream[(Long, String)]
-      val live = IndexStream.maintain(msLive.toDS().toDF("doc_id", "text"), liveTable,
-        Some(ckpt()),
-        ttl = org.apache.spark.sql.streaming.TTLConfig(java.time.Duration.ofMinutes(10)))
-      try {
-        msLive.addData(Seq((100L, "ttl probe document")))
-        awaitDoc(liveTable, 100L, "first sight did not append")
-        msLive.addData(Seq((300L, "ttl probe document")))
-        Thread.sleep(3000) // several 100 ms triggers: the batch definitely ran
-        assert(countDocs(liveTable, 300L) === 0L, "live-state re-arrival appended")
-      } finally live.stop()
-      // phase (b): short TTL — expiry re-admits, lower-bounded by a sleep
-      // that starts only after the first append is confirmed on disk
-      val expTable = java.nio.file.Files.createTempDirectory("graft_fpttl_exp").toString + "/index"
-      val msExp = MemoryStream[(Long, String)]
-      val exp = IndexStream.maintain(msExp.toDS().toDF("doc_id", "text"), expTable,
-        Some(ckpt()),
-        ttl = org.apache.spark.sql.streaming.TTLConfig(java.time.Duration.ofSeconds(2)))
-      try {
-        msExp.addData(Seq((100L, "ttl probe document")))
-        awaitDoc(expTable, 100L, "first sight did not append")
-        Thread.sleep(8000) // ≫ 2 s TTL, measured from the CONFIRMED append
-        // doc 200 > 100: an un-evicted min would suppress it — its
-        // admission as first-sight proves the fingerprint expired
-        msExp.addData(Seq((200L, "ttl probe document")))
-        awaitDoc(expTable, 200L,
-          "post-expiry re-arrival was suppressed: TTL did not evict the fingerprint")
-        assert(countDocs(expTable, 200L) === 1L)
-      } finally exp.stop()
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      msLive.addData(Seq((100L, "ttl probe document")))
+      awaitDoc(liveTable, 100L, "first sight did not append")
+      msLive.addData(Seq((300L, "ttl probe document")))
+      Thread.sleep(3000) // several 100 ms triggers: the batch definitely ran
+      assert(countDocs(liveTable, 300L) === 0L, "live-state re-arrival appended")
+    } finally live.stop()
+    // phase (b): short TTL — expiry re-admits, lower-bounded by a sleep
+    // that starts only after the first append is confirmed on disk
+    val expTable = java.nio.file.Files.createTempDirectory("graft_fpttl_exp").toString + "/index"
+    val msExp = MemoryStream[(Long, String)]
+    val exp = IndexStream.maintain(msExp.toDS().toDF("doc_id", "text"), expTable,
+      ttl = org.apache.spark.sql.streaming.TTLConfig(java.time.Duration.ofSeconds(2)))
+    try {
+      msExp.addData(Seq((100L, "ttl probe document")))
+      awaitDoc(expTable, 100L, "first sight did not append")
+      Thread.sleep(8000) // ≫ 2 s TTL, measured from the CONFIRMED append
+      // doc 200 > 100: an un-evicted min would suppress it — its
+      // admission as first-sight proves the fingerprint expired
+      msExp.addData(Seq((200L, "ttl probe document")))
+      awaitDoc(expTable, 200L,
+        "post-expiry re-arrival was suppressed: TTL did not evict the fingerprint")
+      assert(countDocs(expTable, 200L) === 1L)
+    } finally exp.stop()
   }
 
   test("q248 streaming twin: maintained octave grid reproduces the batch PSI report exactly") {
@@ -1017,8 +983,6 @@ class StreamingSpec extends SparkSpec {
         r.getAs[Long]("event_id"), r.getAs[String]("event_type")))
       .sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id)) // in-order feed (the A16 contract)
       .toSeq
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ms = MemoryStream[EdgeStream.Ev]
     val query = EdgeStream.maintain(
       EdgeStream.transitions(ms.toDS()).toDF(), table)
@@ -1053,10 +1017,7 @@ class StreamingSpec extends SparkSpec {
         .queries("q130_journey_pagerank")(spark, sf).collect()
         .map(r => (r.getString(0), r.getLong(1))).toSeq
       assert(gotRanks === wantRanks)
-    } finally {
-      try query.stop()
-      finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
+    } finally query.stop()
   }
   test("q124 streaming twin: live conversion tracking converges to batch gaps") {
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -1097,28 +1058,24 @@ class StreamingSpec extends SparkSpec {
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     import graft.streaming.ChunkStream
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val table = java.nio.file.Files.createTempDirectory("graft_chunks").toString + "/ledger"
+    val rows = Tables.documents(spark, sf).select("source", "text").collect()
+      .map(r => (r.getAs[String]("source"), r.getAs[String]("text"))).toSeq
+    val ms = MemoryStream[(String, String)]
+    val query = ChunkStream.maintain(ms.toDS().toDF("source", "text"), table)
     try {
-      val table = java.nio.file.Files.createTempDirectory("graft_chunks").toString + "/ledger"
-      val rows = Tables.documents(spark, sf).select("source", "text").collect()
-        .map(r => (r.getAs[String]("source"), r.getAs[String]("text"))).toSeq
-      val ms = MemoryStream[(String, String)]
-      val query = ChunkStream.maintain(ms.toDS().toDF("source", "text"), table, Some(ckpt()))
-      try {
-        rows.grouped(rows.size / 3 + 1).foreach { chunk =>
-          ms.addData(chunk); query.processAllAvailable()
-        }
-        def tup(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
-          (r.getAs[String]("source"), r.getAs[Long]("n_chunks"), r.getAs[Long]("bytes"),
-            r.getAs[Long]("n_uniq"), r.getAs[Long]("uniq_bytes"),
-            r.getAs[Long]("savings_milli"))).toSeq
-        val got = tup(ChunkStream.readReport(spark, table))
-        val want = tup(graft.operators.Dedup.queries("q220_cdc_chunks")(spark, sf))
-        assert(got === want)
-        assert(want.nonEmpty)
-      } finally query.stop()
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      rows.grouped(rows.size / 3 + 1).foreach { chunk =>
+        ms.addData(chunk); query.processAllAvailable()
+      }
+      def tup(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
+        (r.getAs[String]("source"), r.getAs[Long]("n_chunks"), r.getAs[Long]("bytes"),
+          r.getAs[Long]("n_uniq"), r.getAs[Long]("uniq_bytes"),
+          r.getAs[Long]("savings_milli"))).toSeq
+      val got = tup(ChunkStream.readReport(spark, table))
+      val want = tup(graft.operators.Dedup.queries("q220_cdc_chunks")(spark, sf))
+      assert(got === want)
+      assert(want.nonEmpty)
+    } finally query.stop()
   }
 
   test("q226 streaming twin: keyed signed-merge view converges and retracts zeroed keys") {
@@ -1130,47 +1087,43 @@ class StreamingSpec extends SparkSpec {
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     import graft.streaming.ViewStream
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val table = java.nio.file.Files.createTempDirectory("graft_view").toString + "/view"
+    val o = Tables.orders(spark, sf).select(col("o_orderkey"), col("o_custkey"),
+      expr("CAST(round(o_totalprice * 100, 0) AS BIGINT)").as("cents"))
+    val seg = Tables.customer(spark, sf)
+      .select(col("c_custkey"), col("c_mktsegment").as("seg"))
+    def rows(df: org.apache.spark.sql.DataFrame, sgn: Long) =
+      df.join(seg, col("o_custkey") === col("c_custkey"))
+        .select(col("o_custkey"), col("seg"), col("cents")).collect()
+        .map(r => (r.getAs[Long]("o_custkey"), r.getAs[String]("seg"),
+          r.getAs[Long]("cents"), sgn)).toSeq
+    val standing = rows(o.filter("o_orderkey % 7 <> 0"), 1L)
+    val adds = rows(o.filter("o_orderkey % 7 = 0 AND o_orderkey % 11 <> 0"), 1L)
+    val removes = rows(o.filter("o_orderkey % 11 = 0 AND o_orderkey % 7 <> 0"), -1L)
+    val synth = (9999999L, "SYN", 100L, 1L)
+    val ms = MemoryStream[(Long, String, Long, Long)]
+    val query = ViewStream.maintain(
+      ms.toDS().toDF("o_custkey", "seg", "cents", "sgn"), table)
     try {
-      val table = java.nio.file.Files.createTempDirectory("graft_view").toString + "/view"
-      val o = Tables.orders(spark, sf).select(col("o_orderkey"), col("o_custkey"),
-        expr("CAST(round(o_totalprice * 100, 0) AS BIGINT)").as("cents"))
-      val seg = Tables.customer(spark, sf)
-        .select(col("c_custkey"), col("c_mktsegment").as("seg"))
-      def rows(df: org.apache.spark.sql.DataFrame, sgn: Long) =
-        df.join(seg, col("o_custkey") === col("c_custkey"))
-          .select(col("o_custkey"), col("seg"), col("cents")).collect()
-          .map(r => (r.getAs[Long]("o_custkey"), r.getAs[String]("seg"),
-            r.getAs[Long]("cents"), sgn)).toSeq
-      val standing = rows(o.filter("o_orderkey % 7 <> 0"), 1L)
-      val adds = rows(o.filter("o_orderkey % 7 = 0 AND o_orderkey % 11 <> 0"), 1L)
-      val removes = rows(o.filter("o_orderkey % 11 = 0 AND o_orderkey % 7 <> 0"), -1L)
-      val synth = (9999999L, "SYN", 100L, 1L)
-      val ms = MemoryStream[(Long, String, Long, Long)]
-      val query = ViewStream.maintain(
-        ms.toDS().toDF("o_custkey", "seg", "cents", "sgn"), table, Some(ckpt()))
-      try {
-        standing.grouped(standing.size / 2 + 1).foreach { c =>
-          ms.addData(c); query.processAllAvailable()
-        }
-        ms.addData(adds :+ synth); query.processAllAvailable()
-        assert(ViewStream.readView(spark, table).filter(col("k") === 9999999L).count() === 1L,
-          "synthetic key must be live before its removal")
-        ms.addData(removes :+ synth.copy(_4 = -1L)); query.processAllAvailable()
-        def tup(df: org.apache.spark.sql.DataFrame) = df.collect()
-          .map(r => (r.getAs[Long]("k"), r.getAs[String]("seg"),
-            r.getAs[Long]("n"), r.getAs[Long]("cents"))).toSeq.sortBy(t => (t._1, t._2))
-        val got = tup(ViewStream.readView(spark, table))
-        val want = tup(o.filter("o_orderkey % 11 <> 0")
-          .join(seg, col("o_custkey") === col("c_custkey"))
-          .groupBy(col("o_custkey").as("k"), col("seg"))
-          .agg(count(lit(1)).as("n"), sum("cents").as("cents")))
-        assert(got === want)
-        assert(!got.exists(_._1 == 9999999L), "retracted key leaked into the view")
-        assert(want.nonEmpty)
-      } finally query.stop()
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      standing.grouped(standing.size / 2 + 1).foreach { c =>
+        ms.addData(c); query.processAllAvailable()
+      }
+      ms.addData(adds :+ synth); query.processAllAvailable()
+      assert(ViewStream.readView(spark, table).filter(col("k") === 9999999L).count() === 1L,
+        "synthetic key must be live before its removal")
+      ms.addData(removes :+ synth.copy(_4 = -1L)); query.processAllAvailable()
+      def tup(df: org.apache.spark.sql.DataFrame) = df.collect()
+        .map(r => (r.getAs[Long]("k"), r.getAs[String]("seg"),
+          r.getAs[Long]("n"), r.getAs[Long]("cents"))).toSeq.sortBy(t => (t._1, t._2))
+      val got = tup(ViewStream.readView(spark, table))
+      val want = tup(o.filter("o_orderkey % 11 <> 0")
+        .join(seg, col("o_custkey") === col("c_custkey"))
+        .groupBy(col("o_custkey").as("k"), col("seg"))
+        .agg(count(lit(1)).as("n"), sum("cents").as("cents")))
+      assert(got === want)
+      assert(!got.exists(_._1 == 9999999L), "retracted key leaked into the view")
+      assert(want.nonEmpty)
+    } finally query.stop()
   }
 
   test("q267 streaming twin: maintained trial grid reproduces the batch SPRT verdicts exactly") {
@@ -1210,30 +1163,26 @@ class StreamingSpec extends SparkSpec {
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     import graft.streaming.LshStream
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val table = java.nio.file.Files.createTempDirectory("graft_lsh").toString + "/cands"
+    val rows = Tables.documents(spark, sf).select("doc_id", "text").collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("text"))).toSeq
+      .sortBy(_._1)
+    val ms = MemoryStream[(Long, String)]
+    val query = LshStream.maintain(ms.toDS().toDF("doc_id", "text"), table)
     try {
-      val table = java.nio.file.Files.createTempDirectory("graft_lsh").toString + "/cands"
-      val rows = Tables.documents(spark, sf).select("doc_id", "text").collect()
-        .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("text"))).toSeq
-        .sortBy(_._1)
-      val ms = MemoryStream[(Long, String)]
-      val query = LshStream.maintain(ms.toDS().toDF("doc_id", "text"), table, Some(ckpt()))
-      try {
-        val chunks = rows.grouped(rows.size / 4 + 1).toSeq
-        chunks.foreach { chunk => ms.addData(chunk); query.processAllAvailable() }
-        def read() = LshStream.readCandidates(spark, table).collect()
-          .map(r => (r.getAs[Long]("a"), r.getAs[Long]("b")) -> r.getAs[Long]("n_bands")).toMap
-        val got = read()
-        val want = graft.operators.Dedup.queries("q272_admission_lsh")(spark, sf)
-          .collect()
-          .map(r => (r.getAs[Long]("a"), r.getAs[Long]("b")) -> r.getAs[Long]("n_bands")).toMap
-        assert(want.nonEmpty, "fixture produced no candidate pairs")
-        assert(got === want)
-        ms.addData(chunks.head); query.processAllAvailable()
-        assert(read() === want, "replayed chunk changed the distinct candidate view")
-      } finally query.stop()
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      val chunks = rows.grouped(rows.size / 4 + 1).toSeq
+      chunks.foreach { chunk => ms.addData(chunk); query.processAllAvailable() }
+      def read() = LshStream.readCandidates(spark, table).collect()
+        .map(r => (r.getAs[Long]("a"), r.getAs[Long]("b")) -> r.getAs[Long]("n_bands")).toMap
+      val got = read()
+      val want = graft.operators.Dedup.queries("q272_admission_lsh")(spark, sf)
+        .collect()
+        .map(r => (r.getAs[Long]("a"), r.getAs[Long]("b")) -> r.getAs[Long]("n_bands")).toMap
+      assert(want.nonEmpty, "fixture produced no candidate pairs")
+      assert(got === want)
+      ms.addData(chunks.head); query.processAllAvailable()
+      assert(read() === want, "replayed chunk changed the distinct candidate view")
+    } finally query.stop()
   }
 
   test("q265 streaming twin: maintained leaf digests converge to batch; re-streaming the corpus cancels every digest to 0") {
@@ -1280,33 +1229,61 @@ class StreamingSpec extends SparkSpec {
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     import graft.streaming.LmStream
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val table = java.nio.file.Files.createTempDirectory("graft_lm").toString + "/counts"
+    val docs = Tables.documents(spark, sf).select("doc_id", "text")
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+    def bruteCounts(ds: Seq[(Long, String)]): Map[String, Long] =
+      ds.flatMap { case (_, t) =>
+        val w = t.split(" ", -1); w.init.zip(w.tail).map { case (a, b) => s"$a $b" }
+      }.groupBy(identity).map { case (k, v) => (k, v.length.toLong) }
+    val ms = MemoryStream[(Long, String)]
+    val query = LmStream.maintain(
+      ms.toDS().toDF("doc_id", "text"), table)
     try {
-      val table = java.nio.file.Files.createTempDirectory("graft_lm").toString + "/counts"
-      val docs = Tables.documents(spark, sf).select("doc_id", "text")
-        .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-      def bruteCounts(ds: Seq[(Long, String)]): Map[String, Long] =
-        ds.flatMap { case (_, t) =>
-          val w = t.split(" ", -1); w.init.zip(w.tail).map { case (a, b) => s"$a $b" }
-        }.groupBy(identity).map { case (k, v) => (k, v.length.toLong) }
-      val ms = MemoryStream[(Long, String)]
-      val query = LmStream.maintain(
-        ms.toDS().toDF("doc_id", "text"), table, Some(ckpt()))
-      try {
-        val chunks = docs.grouped(docs.size / 3 + 1).toSeq
-        ms.addData(chunks.head); query.processAllAvailable()
-        val mid = LmStream.readCounts(spark, table)
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        assert(mid === bruteCounts(chunks.head),
-          "mid-stream view must count exactly the docs streamed so far")
-        chunks.tail.foreach { c => ms.addData(c); query.processAllAvailable() }
-        val got = LmStream.readCounts(spark, table)
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        assert(got === bruteCounts(docs))
-        assert(got.nonEmpty && got.values.sum > got.size,
-          "fixture must exercise counts > 1")
-      } finally query.stop()
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      val chunks = docs.grouped(docs.size / 3 + 1).toSeq
+      ms.addData(chunks.head); query.processAllAvailable()
+      val mid = LmStream.readCounts(spark, table)
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(mid === bruteCounts(chunks.head),
+        "mid-stream view must count exactly the docs streamed so far")
+      chunks.tail.foreach { c => ms.addData(c); query.processAllAvailable() }
+      val got = LmStream.readCounts(spark, table)
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(got === bruteCounts(docs))
+      assert(got.nonEmpty && got.values.sum > got.size,
+        "fixture must exercise counts > 1")
+    } finally query.stop()
+  }
+
+  test("q283 twin restart: the keyed count state resumes from the table's checkpoint") {
+    // The five keyed maintainers checkpoint at <table>.ckpt, so a second
+    // maintain on the same table resumes the first one's state and batch
+    // ids. Stream half the corpus, stop, start again on the same table
+    // with the rest: the restarted run's epochs must hold exactly the
+    // second half's bigrams (a lost checkpoint would replay the stream
+    // from batch 0), and the view must equal the batch corpus counts.
+    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import spark.implicits._
+    import graft.streaming.LmStream
+    val table = java.nio.file.Files.createTempDirectory("graft_lm_restart").toString + "/counts"
+    val docs = Tables.documents(spark, sf).select("doc_id", "text")
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+    def bruteCounts(ds: Seq[(Long, String)]): Map[String, Long] =
+      ds.flatMap { case (_, t) =>
+        val w = t.split(" ", -1); w.init.zip(w.tail).map { case (a, b) => s"$a $b" }
+      }.groupBy(identity).map { case (k, v) => (k, v.length.toLong) }
+    val (first, rest) = docs.splitAt(docs.size / 2)
+    val ms = MemoryStream[(Long, String)]
+    def start() = LmStream.maintain(ms.toDS().toDF("doc_id", "text"), table)
+    val q1 = start()
+    try { ms.addData(first); q1.processAllAvailable() } finally q1.stop()
+    val q2 = start()
+    try { ms.addData(rest); q2.processAllAvailable() } finally q2.stop()
+    val resumed = spark.read.parquet(table).filter(col("batch") > q1.lastProgress.batchId)
+    assert(resumed.count() === bruteCounts(rest).size.toLong,
+      "the restarted maintain did not resume from the table's checkpoint")
+    val got = LmStream.readCounts(spark, table)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(got === bruteCounts(docs))
   }
 }
