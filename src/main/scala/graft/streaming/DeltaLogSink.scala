@@ -107,11 +107,16 @@ object DeltaLogSink {
     *    deleted first, and an interrupted publish is finished or undone
     *    before the next batch reads the table ([[GridSwap.recover]]).
     *
+    * The query is named `table`: one table has one checkpoint, so at most
+    * one query per table runs at a time, and Spark refuses a second
+    * active query of the same name in a session.
+    *
     * Output mode is `append`: every input is stateless, or (EdgeStream)
     * an Append-mode stateful upstream, so each row reaches one batch. */
   def maintain(input: DataFrame, table: String, keys: Seq[String], aggs: Seq[Column])
       (delta: DataFrame => DataFrame): StreamingQuery =
     input.writeStream
+      .queryName(table)
       .option("checkpointLocation", table + ".ckpt")
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         val applied = GridSwap.recover(table)
@@ -132,16 +137,18 @@ object DeltaLogSink {
   /** Pattern 5: run `processor` over `grouped` in Update mode and land
     * each micro-batch of its output in `table` through `sink`
     * ([[epochOverwrite]] or [[appendIfNonEmpty]]). The checkpoint lives at
-    * `<table>.ckpt`, as in [[maintain]], so a restart resumes the keyed
-    * state together with the log it feeds. Under a TTL the query runs in
-    * [[timeMode]]'s ProcessingTime mode, which schedules a micro-batch
-    * every trigger (timers could fire): the trigger is paced at 100 ms
-    * so an idle stream does not busy-loop empty batches. */
+    * `<table>.ckpt` and the query is named `table`, as in [[maintain]],
+    * so a restart resumes the keyed state together with the log it feeds.
+    * Under a TTL the query runs in [[timeMode]]'s ProcessingTime mode,
+    * which schedules a micro-batch every trigger (timers could fire): the
+    * trigger is paced at 100 ms so an idle stream does not busy-loop
+    * empty batches. */
   def maintainKeyed[K, V, U: Encoder](grouped: KeyValueGroupedDataset[K, V],
       processor: StatefulProcessor[K, V, U], table: String, ttl: TTLConfig = TTLConfig.NONE)
       (sink: String => (Dataset[U], Long) => Unit): StreamingQuery =
     grouped.transformWithState(processor, timeMode(ttl), OutputMode.Update())
       .writeStream
+      .queryName(table)
       .option("checkpointLocation", table + ".ckpt")
       .foreachBatch(sink(table))
       .outputMode("update")

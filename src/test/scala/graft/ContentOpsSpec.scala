@@ -2,6 +2,7 @@ package graft
 
 import graft.contentops.{ContentOps, Fixture, HttpResolver}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** The reference's normative test material (SURVEY.md §5): the golden
   * draft/published interleaving (user-guide.md:125-139), forced S3-path
@@ -87,7 +88,8 @@ class ContentOpsSpec extends SparkSpec {
       val b = "definitely not gzip".getBytes("UTF-8")
       ex.sendResponseHeaders(200, b.length.toLong); ex.getResponseBody.write(b)
     }
-    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(8))
+    val handlers = java.util.concurrent.Executors.newFixedThreadPool(8)
+    server.setExecutor(handlers)
     server.start()
     try {
       val base = s"http://127.0.0.1:${server.getAddress.getPort}"
@@ -117,7 +119,7 @@ class ContentOpsSpec extends SparkSpec {
         (0, "tconn", "http://127.0.0.1:9/unreachable"),
         (1, "tinln", """{"inline":true}"""))
       val outRows = HttpResolver.resolveWithReasons(spark.createDataset(hard)
-          .repartition(1), // single partition: the flaky counter must see retry before any second task
+          .repartition(1), // one task: the flaky URL's retry follows its own 500, before the observe() pass below
           timeoutMs = 300L, isUrl = _.startsWith("http"))
         .collect().map(r => r.getString(1) ->
           ((Option(r.getString(2)), Option(r.getString(3))))).toMap
@@ -149,7 +151,63 @@ class ContentOpsSpec extends SparkSpec {
         .filter(col("raw").isNotNull).count()
       val m = obs.get
       assert(m("n_expired") === 1L && m("n_missing") === 1L && m("n_transient") === 3L)
-    } finally server.stop(0)
+    } finally { server.stop(0); handlers.shutdownNow() }
+  }
+
+  test("real-HTTP resolver keeps a bounded window of GETs in flight, in input order, one retry per flaky URL") {
+    import com.sun.net.httpserver.{HttpExchange, HttpServer}
+    import java.util.concurrent.{ConcurrentHashMap, Executors, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    import spark.implicits._
+    // Each response is parked ~50 ms on a scheduler, so the handler
+    // threads do not cap how many GETs the server sees at once.
+    val server = HttpServer.create(new java.net.InetSocketAddress("127.0.0.1", 0), 128)
+    val handlers = Executors.newFixedThreadPool(2)
+    val timer = Executors.newScheduledThreadPool(1)
+    val inFlight, maxInFlight = new AtomicInteger(0)
+    val hits = new ConcurrentHashMap[String, AtomicInteger]()
+    def json(path: String) = s"""{"path":"$path"}"""
+    server.createContext("/", (ex: HttpExchange) => {
+      val path = ex.getRequestURI.getPath
+      val n = hits.computeIfAbsent(path, _ => new AtomicInteger).incrementAndGet()
+      maxInFlight.accumulateAndGet(inFlight.incrementAndGet(), math.max)
+      // a flaky URL answers 500 once, then 200
+      val b = if (path.startsWith("/flaky/") && n == 1) Array.emptyByteArray
+        else Fixture.gzip(json(path).getBytes("UTF-8"))
+      timer.schedule(new Runnable {
+        def run(): Unit = try {
+          ex.sendResponseHeaders(if (b.isEmpty) 500 else 200, if (b.isEmpty) -1L else b.length.toLong)
+          if (b.nonEmpty) ex.getResponseBody.write(b)
+        } finally { inFlight.decrementAndGet(); ex.close() }
+      }, 50L, TimeUnit.MILLISECONDS)
+    })
+    server.setExecutor(handlers)
+    server.start()
+    try {
+      val base = s"http://127.0.0.1:${server.getAddress.getPort}"
+      val rows = (0 until 100).map { i =>
+        val p =
+          if (i % 10 == 3) s"""{"inline":$i}"""
+          else if (i % 17 == 5) s"$base/flaky/$i"
+          else s"$base/ok/$i"
+        (0, f"s$i%03d", p)
+      }
+      val out = HttpResolver.resolveWithReasons(spark.sparkContext.parallelize(rows, 1).toDS(),
+          isUrl = _.startsWith("http"))
+        .collect().map(r => (r.getString(1), r.getString(2), r.getString(3)))
+      assert(out.map(_._1).toSeq === rows.map(_._2), "rows come back in input order")
+      rows.zip(out).foreach { case ((_, _, p), (seq, raw, reason)) =>
+        assert(raw === (if (p.startsWith(base)) json(p.stripPrefix(base)) else p), seq)
+        assert(reason === null, seq)
+      }
+      val urls = rows.map(_._3).filter(_.startsWith(base)).map(_.stripPrefix(base))
+      val flaky = urls.filter(_.startsWith("/flaky/"))
+      assert(flaky.size >= 3)
+      flaky.foreach(u => assert(hits.get(u).get === 2, s"$u: one retry after its own 500"))
+      assert(hits.values.asScala.map(_.get).sum === urls.size + flaky.size, "no other extra GET")
+      assert(maxInFlight.get > 1 && maxInFlight.get <= HttpResolver.InFlight,
+        s"max in flight ${maxInFlight.get}")
+    } finally { server.stop(0); handlers.shutdownNow(); timer.shutdownNow() }
   }
 
   test("golden sequence: two independent latest-state rows, never a publish cycle") {

@@ -657,6 +657,7 @@ class StreamingSpec extends SparkSpec {
     val ms = MemoryStream[(Long, String)]
     val query = IndexStream.maintain(ms.toDS().toDF("doc_id", "text"), table)
     try {
+      assert(query.name === table, "a maintained keyed query is named after its table")
       val chunks = rows.grouped(rows.size / 4 + 1).toSeq
       chunks.foreach { chunk => ms.addData(chunk); query.processAllAvailable() }
       def read() = IndexStream.readIndex(spark, table).collect()
@@ -957,6 +958,7 @@ class StreamingSpec extends SparkSpec {
     val ms = MemoryStream[(String, Long)]
     val query = GridStream.maintain(ms.toDS().toDF("event_type", "day"), table)
     try {
+      assert(query.name === table, "a maintained query is named after its table")
       rows.grouped(rows.size / 4 + 1).foreach { chunk =>
         ms.addData(chunk); query.processAllAvailable()
       }
