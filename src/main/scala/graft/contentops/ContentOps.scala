@@ -4,7 +4,7 @@ import graft.QueryPack
 import graft.functions.GzipDecode
 import org.apache.spark.sql.{Column, DataFrame, GraftColumn, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.types._
 
 /** The reference's entire executable + prescribed surface as a Spark
@@ -109,12 +109,12 @@ object ContentOps extends QueryPack {
   private def gunzipStr(c: Column): Column = GraftColumn(GzipDecode(GraftColumn.expr(c)))
 
   /** A3: S3 fetch stand-in over the fixture object store — on miss,
-    * log-and-skip semantics (null); A4: only an `https` payload is a
-    * pointer, anything else is the record itself. (The real-network form
-    * of this exact stage is [[HttpResolver.resolve]].) */
+    * log-and-skip semantics (null); A4: only a pointer payload is
+    * fetched, anything else is the record itself. (The real-network form
+    * of this exact stage is [[HttpResolver.resolveWithReasons]].) */
   private def resolveFrom(store: Map[String, Array[Byte]], p: String): String =
     if (p == null) null
-    else if (p.startsWith("https"))
+    else if (HttpResolver.isPointer(p))
       store.get(p).map(b => new String(Fixture.gunzip(b),
         java.nio.charset.StandardCharsets.UTF_8)).orNull
     else p
@@ -125,33 +125,43 @@ object ContentOps extends QueryPack {
 
   /** A2 + A3 as one column over the wire frame's `payload`: the resolved
     * record JSON, null when the fetch failed. */
-  private def resolvedPayload: Column = resolveUdf(gunzipStr(col("payload")))
+  private[graft] def resolvedPayload: Column = resolveUdf(gunzipStr(col("payload")))
 
-  /** Wire records → gzip-decoded payload strings `(shard, seq, payload)` —
-    * the shared front half (A2) of every A3 resolve path: the fixture
-    * stand-in below, and the real-HTTP [[HttpResolver.resolve]]. */
-  def decodedPayloads(s: SparkSession): org.apache.spark.sql.Dataset[(Int, String, String)] = {
-    import s.implicits._
-    s.createDataset(Fixture.wireRecords).toDF()
-      .withColumn("payload_str", gunzipStr(col("payload")))
-      .select(col("shard"), col("seq"), col("payload_str")).as[(Int, String, String)]
-  }
+  private[graft] def verbCol = split(col("operation"), "-").getItem(0)  // A8
+  private[graft] def ctypeCol = split(col("operation"), "-").getItem(1)
 
-  /** A3 via mapPartitions with the fixture object store standing in for
-    * the network; the REAL client path is [[HttpResolver.resolve]], which
-    * shares [[decodedPayloads]] and differs only in how bytes are fetched.
-    * Returns (shard, seq, raw). ContentOpsSpec proves both row-identical
-    * to the projection-based path used by the oracle queries. */
-  def resolveViaMapPartitions(s: SparkSession): DataFrame = {
-    import s.implicits._
-    decodedPayloads(s).mapPartitions { it =>
-      val client = Fixture.objectStore // the HttpResolver.client stand-in
-      it.map { case (shard, seq, p) => (shard, seq, resolveFrom(client, p)) }
-    }.toDF("shard", "seq", "raw")
-  }
+  /** A13/A17: a publish event — the created insert of a published copy
+    * (user-guide.md:145). q57 and its stream twin count on this. */
+  private[graft] def isPublish: Column =
+    col("published") && col("created") && verbCol === "insert"
 
-  private def verbCol = split(col("operation"), "-").getItem(0)  // A8
-  private def ctypeCol = split(col("operation"), "-").getItem(1)
+  /** A9: the document key. Draft and published copies of one id are
+    * distinct entities (user-guide.md:119-139). */
+  private val docKey = Seq("id", "branch", "published")
+
+  /** A16: the changelog order. State moves only to a change that is
+    * strictly newer by (date, seq); seq breaks event-time ties. */
+  private def changeOrder = Seq(col("date"), col("seq"))
+
+  /** Each document's changes, unordered (q169 orders them by arrival). */
+  private def byKey: WindowSpec = Window.partitionBy(docKey.map(col): _*)
+
+  /** Each document's changes in changelog order: the version chain that
+    * q80, q161, q211 and q213 walk. */
+  private def keyOrder: WindowSpec = byKey.orderBy(changeOrder: _*)
+
+  /** A10 + A11: each document's latest change by the changelog order, as
+    * `last` (seq, operation, date, headline, word_count), with a
+    * `deleted` tombstone flag — the batch form of
+    * `graft.streaming.ContentStream.StateChange`. `max_by` aggregates
+    * partially, so the key shuffle carries one row per key per map
+    * partition. */
+  private def latest(env: DataFrame): DataFrame =
+    env.groupBy(docKey.map(col): _*)
+      .agg(max_by(
+        struct(col("seq"), col("operation"), col("date"), col("headline"), col("word_count")),
+        struct(changeOrder: _*)).as("last"))
+      .withColumn("deleted", col("last.operation").startsWith("delete"))
 
   // q50: the ingest path itself — every surviving envelope row, verbatim.
   // Proves decode + resolve + skip + validate + parse against the VALUES
@@ -183,12 +193,8 @@ object ContentOps extends QueryPack {
   // documented trap (user-guide.md:119-139). Event-time order with seq
   // tiebreak (A16); keys whose newest op is a delete vanish (:72).
   private def q52(s: SparkSession, d: String): DataFrame =
-    envelope(s)
-      .groupBy(col("id"), col("branch"), col("published")) // A9
-      .agg(max_by(
-        struct(col("seq"), col("operation"), col("date"), col("headline"), col("word_count")),
-        struct(col("date"), col("seq"))).as("last"))
-      .filter(!col("last.operation").startsWith("delete"))
+    latest(envelope(s))
+      .filter(!col("deleted"))
       .select(col("id"), col("branch"), col("published"),
         col("last.seq").as("last_seq"), col("last.date").as("last_date"),
         col("last.headline").as("headline"), col("last.word_count").as("word_count"))
@@ -229,7 +235,7 @@ object ContentOps extends QueryPack {
   // null/delete ⇒ publish; delete after insert ⇒ unpublish). The streaming
   // twin is graft.streaming.ContentStream.publishTransitions.
   private def q54(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy("id", "branch").orderBy(col("date"), col("seq"))
+    val w = Window.partitionBy("id", "branch").orderBy(changeOrder: _*)
     envelope(s)
       .filter(col("published"))
       .withColumn("verb", verbCol)
@@ -294,7 +300,7 @@ object ContentOps extends QueryPack {
   // batch form: daily tumbling counts of publish-proxy events by type.
   private def q57(s: SparkSession, d: String): DataFrame =
     envelope(s)
-      .filter(col("published") && col("created") && verbCol === "insert")
+      .filter(isPublish)
       .groupBy(date_trunc("day", col("date")).as("day"), ctypeCol.as("ctype"))
       .agg(count(lit(1)).as("n_published"))
       .orderBy("day", "ctype")
@@ -310,13 +316,8 @@ object ContentOps extends QueryPack {
   // currently live on the published branch with a body predicate (via the
   // open-schema body path, :112-114).
   private def q58(s: SparkSession, d: String): DataFrame =
-    envelope(s)
-      .groupBy(col("id"), col("branch"), col("published"))
-      .agg(max_by(
-        struct(col("seq"), col("operation"), col("date"), col("headline"), col("word_count")),
-        struct(col("date"), col("seq"))).as("last"))
-      .filter(col("published") &&
-        !col("last.operation").startsWith("delete") &&
+    latest(envelope(s))
+      .filter(col("published") && !col("deleted") &&
         col("last.operation").endsWith("story") &&
         col("last.word_count") > 500)
       .select(col("id"), col("branch"),
@@ -365,17 +366,15 @@ object ContentOps extends QueryPack {
   // time-travel any key. One window per key in (event-time, seq) order —
   // the same shuffle key as every other A9 operator, so at 100 TB the
   // partitioning is shared, and the window is per-key (never global).
-  private def q80(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy("id", "branch", "published").orderBy(col("date"), col("seq"))
+  private def q80(s: SparkSession, d: String): DataFrame =
     envelope(s)
-      .withColumn("valid_to", lead(col("date"), 1).over(w))
+      .withColumn("valid_to", lead(col("date"), 1).over(keyOrder))
       .filter(verbCol === "insert")
       .select(col("id"), col("branch"), col("published"), col("seq"),
         col("headline"), col("word_count"),
         col("date").as("valid_from"), col("valid_to"),
         col("valid_to").isNull.as("is_current"))
       .orderBy("id", "branch", "published", "seq")
-  }
 
   private def q80Sql = Fixture.valuesCte +
     """
@@ -397,11 +396,10 @@ object ContentOps extends QueryPack {
     * count, so output is O(versions · fields-touched), all row-local
     * after the one per-key window. Field names are assumed JSON-path-safe
     * (no dots/quotes), which the reference's ANS bodies satisfy. */
-  def bodyDiff(env: DataFrame): DataFrame = {
-    val w = Window.partitionBy("id", "branch", "published").orderBy(col("date"), col("seq"))
+  def bodyDiff(env: DataFrame): DataFrame =
     env
-      .filter(split(col("operation"), "-").getItem(0) === "insert")
-      .withColumn("prev_body", lag(col("body_raw"), 1).over(w))
+      .filter(verbCol === "insert")
+      .withColumn("prev_body", lag(col("body_raw"), 1).over(keyOrder))
       .filter(col("prev_body").isNotNull) // first version: nothing to diff
       .withColumn("field", explode(array_sort(array_union(
         json_object_keys(col("prev_body")), json_object_keys(col("body_raw"))))))
@@ -413,7 +411,6 @@ object ContentOps extends QueryPack {
         when(col("old_val").isNull, "added")
           .when(col("new_val").isNull, "removed")
           .otherwise("changed").as("kind"))
-  }
 
   /** q211's core, factored for the spec: per (branch, published) copy
     * class, the share of consecutive insert version pairs whose body is
@@ -430,11 +427,10 @@ object ContentOps extends QueryPack {
     * strings WITHIN each engine, so the noop flags (and everything
     * hashed) agree; the fingerprints themselves never reach the output. */
   def noopAudit(env: DataFrame): DataFrame = {
-    val w = Window.partitionBy("id", "branch", "published").orderBy(col("date"), col("seq"))
     val pairs = env
-      .filter(split(col("operation"), "-").getItem(0) === "insert")
+      .filter(verbCol === "insert")
       .withColumn("fp", md5(col("body_raw")))
-      .withColumn("prev_fp", lag(col("fp"), 1).over(w))
+      .withColumn("prev_fp", lag(col("fp"), 1).over(keyOrder))
       .filter(col("prev_fp").isNotNull)
       .withColumn("noop", when(col("fp") === col("prev_fp"), 1L).otherwise(0L))
     val perKey = pairs.groupBy("branch", "published", "id")
@@ -488,12 +484,11 @@ object ContentOps extends QueryPack {
     * (zone-free epoch arithmetic). worst_id/worst_gap_s are NULL when
     * the class has no resurrections — never an innocent key's name. */
   def resurrectionAudit(env: DataFrame): DataFrame = {
-    val w = Window.partitionBy("id", "branch", "published").orderBy(col("date"), col("seq"))
     val ops = env
-      .withColumn("kind", split(col("operation"), "-").getItem(0))
+      .withColumn("kind", verbCol)
       .filter(col("kind").isin("insert", "delete"))
-      .withColumn("prev_kind", lag(col("kind"), 1).over(w))
-      .withColumn("prev_us", lag(unix_micros(col("date")), 1).over(w))
+      .withColumn("prev_kind", lag(col("kind"), 1).over(keyOrder))
+      .withColumn("prev_us", lag(unix_micros(col("date")), 1).over(keyOrder))
       .withColumn("res",
         when(col("kind") === "insert" && col("prev_kind") === "delete", 1L).otherwise(0L))
       .withColumn("gap_s",
@@ -651,8 +646,7 @@ object ContentOps extends QueryPack {
     * published`) — separated so specs can plant stale arrivals the
     * fixture (whose seq order happens to agree with event time) lacks. */
   def staleArrivals(env: DataFrame): DataFrame = {
-    val w = Window.partitionBy("id", "branch", "published").orderBy("seq")
-      .rowsBetween(Window.unboundedPreceding, -1)
+    val w = byKey.orderBy("seq").rowsBetween(Window.unboundedPreceding, -1)
     env
       .withColumn("us", unix_micros(col("date")))
       .withColumn("hwm", max("us").over(w))
@@ -699,7 +693,7 @@ object ContentOps extends QueryPack {
   /** q171 core over any envelope-shaped frame — separated for planted
     * churn in specs (the q169 [[staleArrivals]] precedent). */
   def storageMode(env: DataFrame): DataFrame =
-    env.groupBy("id", "branch", "published")
+    env.groupBy(docKey.map(col): _*)
       .agg(count(lit(1)).as("versions"))
       .groupBy("branch", "published")
       .agg(count(lit(1)).as("n_keys"), sum("versions").as("n_ops"),
@@ -733,27 +727,23 @@ object ContentOps extends QueryPack {
   // surviving published state — which documents have a draft ahead of
   // their published copy (pending edits), by how long, and whether the
   // two copies' visible fields (headline, word_count) currently
-  // disagree. Builds on q52's exact latest-state reduction (max_by with
-  // the (date, seq) A16 ordering, delete-tombstone drop), run once over
+  // disagree. Builds on q52's latest-state fold ([[latest]], the
+  // (date, seq) A16 order, delete-tombstone drop), run once over
   // BOTH copy classes and self-joined on (id, branch) — a key-keyed
   // hash join of two already-collapsed frames, each ≤ one row per copy.
   // Classes: 'in_sync' (both exist, fields agree, draft not newer),
   // 'pending_edits' (draft strictly newer), 'field_divergence' (same
   // recency but fields differ), 'draft_only' / 'published_only'.
   private def q173(s: SparkSession, d: String): DataFrame = {
-    val latest = envelope(s)
-      .groupBy(col("id"), col("branch"), col("published"))
-      .agg(max_by(
-        struct(col("seq"), col("operation"), col("date"), col("headline"), col("word_count")),
-        struct(col("date"), col("seq"))).as("last"))
-      .filter(!col("last.operation").startsWith("delete"))
+    val live = latest(envelope(s))
+      .filter(!col("deleted"))
       .select(col("id"), col("branch"), col("published"),
         col("last.date").as("dt"), col("last.headline").as("h"),
         col("last.word_count").as("wc"))
-    val draft = latest.filter(!col("published"))
+    val draft = live.filter(!col("published"))
       .select(col("id"), col("branch"), col("dt").as("d_dt"),
         col("h").as("d_h"), col("wc").as("d_wc"))
-    val pub = latest.filter(col("published"))
+    val pub = live.filter(col("published"))
       .select(col("id"), col("branch"), col("dt").as("p_dt"),
         col("h").as("p_h"), col("wc").as("p_wc"))
     draft.join(pub, Seq("id", "branch"), "full_outer")

@@ -122,6 +122,8 @@ object Fixture {
     bos.toByteArray
   }
 
+  /** The one gzip read loop: [[graft.functions.GzipDecode]] (the A2
+    * decode) and the resolve paths call it. Throws on malformed input. */
   def gunzip(b: Array[Byte]): Array[Byte] = {
     val in = new GZIPInputStream(new java.io.ByteArrayInputStream(b))
     val out = new ByteArrayOutputStream()

@@ -37,7 +37,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
   * log-and-skip contract of the reference loop (user-guide.md:34-39).
   * ContentOpsSpec drives this against an in-JVM HTTP fixture server:
   * 200+gzip, 404, timeout, and corrupt-body paths, proving the output
-  * row-identical to the fixture-store stand-in on the same wire fixture.
+  * equal to the fixture's expected envelope JSON on the same wire fixture.
   */
 object HttpResolver {
 
@@ -132,30 +132,29 @@ object HttpResolver {
       } catch { case scala.util.control.NonFatal(_) => done(null, "transient") }
   }
 
+  /** A4: a payload is a pointer to fetch when it starts with `https`
+    * (the reference's `payload[0:5] == 'https'` branch); anything else is
+    * the record itself. The fixture-store resolve in [[ContentOps]] reads
+    * the same test. */
+  private[contentops] def isPointer(payload: String): Boolean = payload.startsWith("https")
+
   /** The resolve stage: decoded payload strings `(shard, seq, payload)` →
-    * `(shard, seq, raw)` where `raw` is the envelope JSON — fetched and
-    * gunzipped when the payload is a pre-signed URL (`isUrl`, the
-    * reference's `payload[0:5] == 'https'` branch), passed through when
-    * inline, null (⇒ caller skips) when the fetch or decode fails.
+    * `(shard, seq, raw, skip_reason)` where `raw` is the envelope JSON —
+    * fetched and gunzipped when the payload is a pointer (`isUrl`),
+    * passed through when inline, null (⇒ caller skips) when the fetch or
+    * decode fails. `skip_reason` (null on success) lets the A19
+    * observe() telemetry count the classes apart without a second scan:
+    * `expired` (403 — re-sign upstream) vs `missing` (other 4xx) vs
+    * `transient` (5xx/timeout, already retried once) vs `corrupt` (200
+    * but not gzip) vs `null_payload`. Rows keep their input order within
+    * each partition.
     *
     * `isUrl` is a parameter only so tests can point at a plain-http
-    * in-JVM fixture server; production uses the default per the spec. */
-  def resolve(
-      decoded: Dataset[(Int, String, String)],
-      timeoutMs: Long = 10000L,
-      isUrl: String => Boolean = _.startsWith("https")): DataFrame =
-    resolveWithReasons(decoded, timeoutMs, isUrl).select("shard", "seq", "raw")
-
-  /** [[resolve]] plus a `skip_reason` column (null on success) so the A19
-    * observe() telemetry can count the classes apart without a second
-    * scan: `expired` (403 — re-sign upstream) vs `missing` (other 4xx)
-    * vs `transient` (5xx/timeout, already retried once) vs `corrupt`
-    * (200 but not gzip) vs `null_payload`. Rows keep their input order
-    * within each partition. */
+    * in-JVM fixture server; production uses the default, [[isPointer]]. */
   def resolveWithReasons(
       decoded: Dataset[(Int, String, String)],
       timeoutMs: Long = 10000L,
-      isUrl: String => Boolean = _.startsWith("https")): DataFrame = {
+      isUrl: String => Boolean = isPointer): DataFrame = {
     import decoded.sparkSession.implicits._
     decoded.mapPartitions { it =>
       val window = new Window(it, timeoutMs, isUrl)

@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.contentops.Fixture
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BinaryType, DataType, StringType}
@@ -10,7 +11,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * /root/reference/docs/user-guide.md:28; GZIPInputStream auto-detects the
   * header like wbits 15+32). Returns null on malformed input, matching the
   * reference's log-and-skip error tolerance (:36-39): the downstream
-  * `isNotNull` filter is the skip.
+  * `isNotNull` filter is the skip. The read loop is the wire codec's
+  * own [[graft.contentops.Fixture.gunzip]], which throws instead.
   *
   * SURVEY.md §4 flagged the UDF version as a Catalyst black box; this
   * expression keeps the decode inside whole-stage codegen (null-tracking
@@ -23,14 +25,8 @@ case class GzipDecode(child: Expression)
   override def prettyName: String = "gzip_decode"
 
   def compute(bytes: Array[Byte]): UTF8String =
-    try {
-      val in = new java.util.zip.GZIPInputStream(new java.io.ByteArrayInputStream(bytes))
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n > 0) { out.write(buf, 0, n); n = in.read(buf) }
-      UTF8String.fromBytes(out.toByteArray)
-    } catch { case _: java.io.IOException => null }
+    try UTF8String.fromBytes(Fixture.gunzip(bytes))
+    catch { case _: java.io.IOException => null }
 
   override def nullSafeEval(input: Any): Any = compute(input.asInstanceOf[Array[Byte]])
 

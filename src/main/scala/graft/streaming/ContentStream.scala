@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import graft.contentops.ContentOps
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
@@ -18,9 +19,9 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
   * are `transformWithState` processors on the RocksDB state store
   * ([[graft.Session]] sets it), since latest-state over all documents is
   * unbounded; per-shard arrival order maps to per-partition order, and
-  * both fold their per-batch group in (event-time, seq) order so
-  * cross-shard interleaving cannot corrupt state (the
-  * user-guide.md:125-139 gotcha).
+  * both compare records by [[changeOrder]], the (event-time, seq) order
+  * the batch twins use, so cross-shard interleaving cannot corrupt state
+  * (the user-guide.md:125-139 gotcha).
   */
 object ContentStream {
 
@@ -28,7 +29,7 @@ object ContentStream {
     * decimal STRING (Kinesis sequence numbers overflow BIGINT; fixed width
     * makes lexicographic order numeric order — see graft.streaming
     * .WireSource). Every (date, seq) comparison below is therefore
-    * (Long, String). */
+    * (Timestamp, String), through [[changeOrder]]. */
   case class EnvelopeRow(seq: String, operation: String, date: Timestamp, id: String,
       branch: String, published: Boolean, created: Boolean, headline: String, wordCount: Int)
 
@@ -39,7 +40,7 @@ object ContentStream {
       lastDate: Timestamp, headline: String, wordCount: Int, deleted: Boolean)
 
   case class PubKey(id: String, branch: String)
-  case class PubState(exists: Boolean, lastSeq: String, lastDateMs: Long)
+  case class PubState(exists: Boolean, lastSeq: String, lastDate: Timestamp)
   case class PubEvent(id: String, branch: String, event: String, seq: String, date: Timestamp)
 
   private implicit val docKeyEnc: Encoder[DocKey] = Encoders.product[DocKey]
@@ -49,14 +50,24 @@ object ContentStream {
   private implicit val pubStateEnc: Encoder[PubState] = Encoders.product[PubState]
   private implicit val pubEventEnc: Encoder[PubEvent] = Encoders.product[PubEvent]
 
+  /** A16: a change is newer when it is later by (date, seq), the order
+    * batch `max_by(…, struct(date, seq))` and the batch windows use.
+    * `Timestamp.compareTo(Timestamp)` compares the nanos field too, so
+    * two changes inside one millisecond keep their order. */
+  private val changeOrder: Ordering[(Timestamp, String)] = Ordering.Tuple2(
+    new Ordering[Timestamp] { def compare(a: Timestamp, b: Timestamp): Int = a.compareTo(b) },
+    Ordering.String)
+
   /** A10/A11 streaming: latest-state materialization with delete
     * tombstones on Spark 4's transformWithState API (StatefulProcessor
     * lifecycle: explicit ValueState handle + TTL hook), keyed on the
     * composite document key. Emits the key's current state once per
     * microbatch that touches it (update semantics — the "synchronize a
-    * foreign CMS" feed, user-guide.md:3). Rows fold in event-time order
-    * on top of prior state; a full-state record only wins if strictly
-    * newer (replacement semantics, user-guide.md:17,72).
+    * foreign CMS" feed, user-guide.md:3). The new state is the newest of
+    * the prior state and the batch's rows by [[changeOrder]]; a
+    * full-state record only wins if strictly newer (replacement
+    * semantics, user-guide.md:17,72), so on a tie the prior state, then
+    * the earliest row, stays.
     *
     * `ttl` is the retention policy for per-key state (the reference is
     * silent on it, so it is an explicit deployment decision): NONE keeps
@@ -76,14 +87,10 @@ object ContentStream {
 
     override def handleInputRows(key: DocKey, rows: Iterator[EnvelopeRow],
         timers: TimerValues): Iterator[StateChange] = {
-      var cur = if (state.exists()) Option(state.get()) else None
-      rows.toSeq.sortBy(e => (e.date.getTime, e.seq)).foreach { e =>
-        val isNewer = cur.forall(c =>
-          Ordering[(Long, String)].gt((e.date.getTime, e.seq), (c.lastDate.getTime, c.lastSeq)))
-        if (isNewer)
-          cur = Some(DocState(e.seq, e.date, e.operation, e.headline, e.wordCount))
-      }
-      cur match {
+      val prior = if (state.exists()) Option(state.get()) else None
+      val changes = rows.map(e => DocState(e.seq, e.date, e.operation, e.headline, e.wordCount))
+      // maxBy keeps the first of equal maxima
+      (prior.iterator ++ changes).maxByOption(c => (c.lastDate, c.lastSeq))(changeOrder) match {
         case Some(c) =>
           state.update(c)
           Iterator.single(StateChange(key.id, key.branch, key.published,
@@ -114,20 +121,20 @@ object ContentStream {
 
     override def handleInputRows(key: PubKey, rows: Iterator[EnvelopeRow],
         timers: TimerValues): Iterator[PubEvent] = {
-      var st = if (state.exists()) state.get() else PubState(exists = false, "", Long.MinValue)
+      var st = if (state.exists()) Option(state.get()) else None
       val out = Vector.newBuilder[PubEvent]
-      rows.toSeq.sortBy(e => (e.date.getTime, e.seq)).foreach { e =>
-        val newer = Ordering[(Long, String)].gt((e.date.getTime, e.seq), (st.lastDateMs, st.lastSeq))
-        if (newer) {
+      rows.toSeq.sortBy(e => (e.date, e.seq))(changeOrder).foreach { e =>
+        if (st.forall(p => changeOrder.gt((e.date, e.seq), (p.lastDate, p.lastSeq)))) {
           val isInsert = e.operation.startsWith("insert")
-          if (isInsert && !st.exists)
+          val existed = st.exists(_.exists)
+          if (isInsert && !existed)
             out += PubEvent(key.id, key.branch, "publish", e.seq, e.date)
-          else if (!isInsert && st.exists)
+          else if (!isInsert && existed)
             out += PubEvent(key.id, key.branch, "unpublish", e.seq, e.date)
-          st = PubState(exists = isInsert, e.seq, e.date.getTime)
+          st = Some(PubState(exists = isInsert, e.seq, e.date))
         }
       }
-      state.update(st)
+      st.foreach(state.update)
       out.result().iterator
     }
   }
@@ -139,13 +146,13 @@ object ContentStream {
 
   /** A17 streaming: windowed publish analytics — watermarked hourly
     * tumbling counts of publish-proxy events by content type
-    * (user-guide.md:3,145). */
+    * (user-guide.md:3,145), on batch q57's predicate and A8 parse. */
   def publishAnalytics(envelope: DataFrame): DataFrame =
     envelope
-      .filter(col("published") && col("created") && col("operation").startsWith("insert"))
+      .filter(ContentOps.isPublish)
       .withWatermark("date", "1 hour")
       .groupBy(window(col("date"), "1 hour").getField("start").as("hour"),
-        split(col("operation"), "-").getItem(1).as("ctype"))
+        ContentOps.ctypeCol.as("ctype"))
       .agg(count(lit(1)).as("n_published"))
 
   /** B28: streaming dedup on the composite key + seq within the watermark. */

@@ -41,8 +41,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * }}}
   *
   * Downstream of this trait everything is identical: gzip_decode →
-  * indirection resolve (per-partition HTTP client in production — the
-  * broadcast object store here) → from_json → keyed operators. At 100 TB
+  * indirection resolve (per-partition HTTP client in production — a UDF
+  * over the static fixture object store here) → from_json → keyed
+  * operators. At 100 TB
   * the resolve stage is the only network-bound operator; it runs
   * mapPartitions with a pooled client so connection setup amortizes per
   * partition, mirroring the reference's per-shard consumer loop.

@@ -36,25 +36,11 @@ class ContentOpsSpec extends SparkSpec {
     assert(got === Fixture.expected.map(o => Fixture.seqStr(o.seq)).toSet)
   }
 
-  test("mapPartitions resolver (production shape) is row-identical to the projection path") {
-    val viaMp = ContentOps.resolveViaMapPartitions(spark)
-      .filter(col("raw").isNotNull)
-    // surviving seqs = expected ops + the alien record (type-filtered later)
-    val got = viaMp.select("seq").collect().map(_.getString(0)).toSet
-    assert(got === (Fixture.expected.map(o => Fixture.seqStr(o.seq)).toSet + Fixture.AlienSeq))
-    // inline and indirected records both resolve to the exact envelope JSON
-    val rawBySeq = viaMp.filter(col("seq") =!= Fixture.AlienSeq).collect()
-      .map(r => r.getAs[String]("seq") -> r.getAs[String]("raw")).toMap
-    Fixture.expected.foreach { o =>
-      assert(rawBySeq(Fixture.seqStr(o.seq)) === Fixture.envelopeJson(o), s"seq ${o.seq}")
-    }
-  }
-
   test("real-HTTP resolver against an in-JVM fixture server is row-identical; 403/404/5xx/timeout/corrupt classified, one bounded retry") {
     import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
     import spark.implicits._
     // An actual HTTP server (JDK built-in, loopback, ephemeral port)
-    // serving the SAME gzipped objects the broadcast store holds — the
+    // serving the SAME gzipped objects as the fixture object store — the
     // closest a zero-egress sandbox gets to the reference's pre-signed-S3
     // fetch (user-guide.md:32-44), network stack included.
     val server = HttpServer.create(new java.net.InetSocketAddress("127.0.0.1", 0), 0)
@@ -95,18 +81,19 @@ class ContentOpsSpec extends SparkSpec {
       val base = s"http://127.0.0.1:${server.getAddress.getPort}"
       // Same wire fixture, pre-signed URLs re-pointed at the local server
       // (plain http ⇒ widen the branch predicate for the test only).
-      val rewritten = ContentOps.decodedPayloads(spark).map { case (sh, sq, p) =>
-        (sh, sq,
-          if (p != null && p.startsWith("https://fixture-store"))
-            p.replace("https://fixture-store", base)
-          else p)
-      }
-      val viaHttp = HttpResolver.resolve(rewritten, isUrl = _.startsWith("http"))
+      def text(b: Array[Byte]) = new String(Fixture.gunzip(b), "UTF-8")
+      val rewritten = spark.createDataset(Fixture.wireRecords.map { w =>
+        (w.shard, w.seq, text(w.payload).replace("https://fixture-store", base))
+      })
+      val viaHttp = HttpResolver.resolveWithReasons(rewritten, isUrl = _.startsWith("http"))
       val got = viaHttp.filter(col("raw").isNotNull).collect()
         .map(r => (r.getInt(0), r.getString(1), r.getString(2))).toSet
-      val want = ContentOps.resolveViaMapPartitions(spark).filter(col("raw").isNotNull)
-        .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2))).toSet
-      assert(got === want, "HTTP path must be row-identical to the broadcast stand-in")
+      // every expected op resolves to its exact envelope JSON, inline or
+      // fetched; the alien record passes through (type-filtered later)
+      val alien = Fixture.wireRecords.find(_.seq == Fixture.AlienSeq).get
+      val want = Fixture.expected.map(o => (o.shard, Fixture.seqStr(o.seq), Fixture.envelopeJson(o))).toSet +
+        ((alien.shard, alien.seq, text(alien.payload)))
+      assert(got === want, "HTTP path must yield exactly the expected envelope JSON")
       // failure tolerance: 404, read-timeout, corrupt body, connection
       // refused — each resolves to null (skip); inline payloads pass through
       val hard = Seq(
@@ -246,21 +233,14 @@ class ContentOpsSpec extends SparkSpec {
   }
 
   test("observe(): ingest drop metrics surface without a second scan (A19 observability)") {
-    import graft.functions.GzipDecode
-    import org.apache.spark.sql.GraftColumn
     // the reference prints-and-continues on failed fetches; the engine's
     // equivalent telemetry is an observe() on the ingest frame — metrics
-    // ride the same pass, no extra action.
-    val store = spark.sparkContext.broadcast(Fixture.objectStore)
-    val resolve = org.apache.spark.sql.functions.udf((p: String) =>
-      if (p == null) null
-      else if (p.startsWith("https"))
-        store.value.get(p).map(b => new String(Fixture.gunzip(b), java.nio.charset.StandardCharsets.UTF_8)).orNull
-      else p)
+    // ride the same pass, no extra action. The column is the engine's own
+    // A2 + A3 resolve, the one envelopeFromWire parses.
     import spark.implicits._
     val obs = org.apache.spark.sql.Observation("ingest")
     val observed = spark.createDataset(Fixture.wireRecords).toDF()
-      .withColumn("raw", resolve(GraftColumn(GzipDecode(GraftColumn.expr(col("payload"))))))
+      .withColumn("raw", ContentOps.resolvedPayload)
       .observe(obs,
         count(lit(1)).as("n_records"),
         count(when(col("raw").isNull, 1)).as("n_dropped"))

@@ -49,7 +49,14 @@ class PlanShapeSpec extends SparkSpec {
     // HITS half-step persist chain, the RFM single-pass, the one-scan
     // 32-replica bootstrap, and the Moore-Lewis dual-LM scorer all have
     // hand-won persist/broadcast shapes worth pinning.
-    "q330_hits_scores", "q315_rfm_segments", "q326_moore_lewis")
+    "q330_hits_scores", "q315_rfm_segments", "q326_moore_lewis",
+    // the content-operation changelog queries: each one reads the document
+    // key and the (date, seq) order from the same ContentOps definitions,
+    // so a change to either shows up here as a plan diff.
+    "q52_latest_state", "q54_publish_transitions", "q58_state_extraction",
+    "q80_scd2_versions", "q161_body_field_diff", "q169_stale_arrival_audit",
+    "q171_storage_mode", "q173_draft_published_drift", "q211_noop_republish",
+    "q213_resurrection_audit")
 
   private def diff(want: String, got: String): String = {
     val w = want.linesIterator.toVector

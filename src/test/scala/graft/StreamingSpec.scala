@@ -208,6 +208,55 @@ class StreamingSpec extends SparkSpec {
     } finally query.stop()
   }
 
+  test("sub-millisecond event times: both stateful streams order by the full timestamp, as batch does") {
+    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import spark.implicits._
+    // One key, one micro-batch, two records inside the same millisecond:
+    // the insert at 0.5 ms carries the HIGHER seq, the delete at 0.9 ms the
+    // lower one. By (date, seq) the delete is newer, so the document is
+    // gone and the published copy was published, then unpublished; a
+    // millisecond-truncated order would fall back to seq and flip both.
+    val rows = Seq(
+      EnvelopeRow("000010", "insert-story", Timestamp.valueOf("2024-03-01 00:00:00.0005"),
+        "SUBMS", "default", published = true, created = true, "h", 100),
+      EnvelopeRow("000005", "delete-story", Timestamp.valueOf("2024-03-01 00:00:00.0009"),
+        "SUBMS", "default", published = true, created = false, "h", 100))
+    val batch = spark.createDataset(rows).toDF()
+
+    val ls = MemoryStream[EnvelopeRow]
+    val latest = ContentStream.latestState(ls.toDS())
+      .writeStream.format("memory").queryName("subms_ls_sink").outputMode("update")
+      .option("checkpointLocation", ckpt()).start()
+    val pt = MemoryStream[EnvelopeRow]
+    val trans = ContentStream.publishTransitions(pt.toDS())
+      .writeStream.format("memory").queryName("subms_pt_sink").outputMode("append")
+      .option("checkpointLocation", ckpt()).start()
+    try {
+      ls.addData(rows); latest.processAllAvailable()
+      pt.addData(rows); trans.processAllAvailable()
+      val gotLatest = spark.table("subms_ls_sink").select("lastSeq", "deleted").collect()
+        .map(r => (r.getString(0), r.getBoolean(1))).toSeq
+      val wantLatest = batch.groupBy("id", "branch", "published")
+        .agg(max_by(struct(col("seq"), col("operation")), struct(col("date"), col("seq"))).as("last"))
+        .select(col("last.seq"), col("last.operation").startsWith("delete"))
+        .collect().map(r => (r.getString(0), r.getBoolean(1))).toSeq
+      assert(wantLatest === Seq(("000005", true)))
+      assert(gotLatest === wantLatest)
+      val w = Window.partitionBy("id", "branch").orderBy(col("date"), col("seq"))
+      val wantTrans = batch.filter(col("published"))
+        .withColumn("verb", split(col("operation"), "-").getItem(0))
+        .withColumn("prev_verb", lag(col("verb"), 1).over(w))
+        .filter((col("verb") === "insert" && (col("prev_verb").isNull || col("prev_verb") === "delete")) ||
+          (col("verb") === "delete" && col("prev_verb") === "insert"))
+        .select(col("seq"), when(col("verb") === "insert", "publish").otherwise("unpublish"))
+        .collect().map(r => (r.getString(0), r.getString(1))).toSet
+      assert(wantTrans === Set(("000010", "publish"), ("000005", "unpublish")))
+      val gotTrans = spark.table("subms_pt_sink").select("seq", "event").collect()
+        .map(r => (r.getString(0), r.getString(1))).toSet
+      assert(gotTrans === wantTrans)
+    } finally { latest.stop(); trans.stop() }
+  }
+
   test("watermarked windowed publish analytics matches a batch window count") {
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
