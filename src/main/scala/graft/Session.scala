@@ -28,6 +28,10 @@ object Session {
     // BlockManager startup INFO lines that would otherwise share Bench's
     // bounded output tail with its JSON line
     .config("spark.log.level", "ERROR")
+    // a static conf: Spark's default keeps 100 generated classes, fewer
+    // than one warm ingest pass compiles (~110, AQE included), so every
+    // pass recompiled; `graft.Time` prints the compiles per run
+    .config("spark.sql.codegen.cache.maxEntries", 1000L)
     .config("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     .getOrCreate()

@@ -28,9 +28,10 @@ import org.apache.spark.sql.types._
   * Scale notes (100 TB): the ingest stage is per-row/per-partition only —
   * no shuffle until a keyed operator; latest-state (q52) uses `max_by`
   * partial aggregation on the composite key so the shuffle carries one
-  * pre-reduced row per key per map partition; the object-store resolve
-  * reads the static fixture store, the stand-in for a per-partition HTTP
-  * client (mapPartitions, [[HttpResolver]]), which is the production shape.
+  * pre-reduced row per key per map partition; the S3-indirection resolve
+  * is a per-partition window of fetches ([[HttpResolver]]) over one pooled
+  * HTTP client per executor, and the fixture's own URLs are served from
+  * its in-memory object store through the same window.
   */
 object ContentOps extends QueryPack {
 
@@ -80,15 +81,15 @@ object ContentOps extends QueryPack {
     * decode (A2) → resolve (A3/A4) → validate (A6) → project (A7).
     * KinesisFixtureSpec drives it from a recorded GetRecords response.
     *
-    * One pass per record: the decoded, resolved JSON is parsed once, and
-    * the parse sits in a generator (`inline`), which predicate pushdown
-    * does not cross, so the A6 filter cannot copy the decode and the
-    * parse below the projection. A failed fetch (A19) parses to a null
-    * `type`, so the A6 filter is also the skip. */
+    * One pass per record: the resolved JSON is parsed once, and the parse
+    * sits in a generator (`inline`), which predicate pushdown does not
+    * cross, so the A6 filter cannot copy the parse below the projection.
+    * A skipped record (A19) parses to a null `type`, so the A6 filter is
+    * also the skip. */
   def envelopeFromWire(s: SparkSession, wire: DataFrame): DataFrame =
-    wire
+    resolved(wire)
       .select(col("seq"), col("shard"),
-        inline(array(from_json(resolvedPayload, envelopeSchema))))
+        inline(array(from_json(col("raw"), envelopeSchema))))
       .filter(col("type") === "content-operation") // A6 + A19
       .select(col("*"),
         json_tuple(col("body"), "headline", "word_count").as(Seq("headline", "word_count")))
@@ -104,28 +105,13 @@ object ContentOps extends QueryPack {
         col("word_count").cast("int").as("word_count"),
         col("body").as("body_raw"))
 
-  /** A2: gzip decode (zlib wbits 15+32 ≈ GZIPInputStream auto header) —
-    * native codegen expression, not a UDF (SURVEY.md §4). */
-  private def gunzipStr(c: Column): Column = GraftColumn(GzipDecode(GraftColumn.expr(c)))
-
-  /** A3: S3 fetch stand-in over the fixture object store — on miss,
-    * log-and-skip semantics (null); A4: only a pointer payload is
-    * fetched, anything else is the record itself. (The real-network form
-    * of this exact stage is [[HttpResolver.resolveWithReasons]].) */
-  private def resolveFrom(store: Map[String, Array[Byte]], p: String): String =
-    if (p == null) null
-    else if (HttpResolver.isPointer(p))
-      store.get(p).map(b => new String(Fixture.gunzip(b),
-        java.nio.charset.StandardCharsets.UTF_8)).orNull
-    else p
-
-  /** A3 as one UDF over the static fixture store. Defined once, so every
-    * plan that resolves the same wire input is equal to every other. */
-  private val resolveUdf = udf((p: String) => resolveFrom(Fixture.objectStore, p))
-
-  /** A2 + A3 as one column over the wire frame's `payload`: the resolved
-    * record JSON, null when the fetch failed. */
-  private[graft] def resolvedPayload: Column = resolveUdf(gunzipStr(col("payload")))
+  /** A2 + A3 over a wire frame: `(shard, seq, raw, skip_reason)`. The
+    * gzip decode (zlib wbits 15+32 ≈ GZIPInputStream auto header) is a
+    * native codegen expression, not a UDF (SURVEY.md §4), in a `Project`;
+    * then [[HttpResolver.resolve]] resolves each decoded payload. */
+  private def resolved(wire: DataFrame): DataFrame =
+    HttpResolver.resolve(wire.select(col("shard"), col("seq"),
+      GraftColumn(GzipDecode(GraftColumn.expr(col("payload"))))))
 
   private[graft] def verbCol = split(col("operation"), "-").getItem(0)  // A8
   private[graft] def ctypeCol = split(col("operation"), "-").getItem(1)
@@ -975,9 +961,10 @@ object ContentOps extends QueryPack {
 
   /** ANS-schema gate as a WIRE-PATH STAGE (r15 verdict task 6): takes a
     * (possibly streaming) wire frame `(shard, seq, payload)` — the same
-    * shape `FixtureKinesisSource`/`WireSource` emit — and appends the
-    * first-fail `reason` column per record. Everything is row-local
-    * (codegen gzip + fixture object-store resolve + one parse + one CASE),
+    * shape `FixtureKinesisSource`/`WireSource` emit — and returns each
+    * record's `(shard, seq, raw, skip_reason)` from the envelope's own
+    * resolve stage plus its first-fail `reason`. Everything is row-local
+    * (codegen gzip + the resolve window + one parse + one CASE),
     * so the stage composes into a Structured Streaming micro-batch with no
     * state and no mode constraint; its production seat is right after
     * the Kinesis read, tagging records BEFORE the A6 filter so schema
@@ -986,8 +973,7 @@ object ContentOps extends QueryPack {
     * stream==batch convergence against q365.
     */
   def ansGate(s: SparkSession, wire: DataFrame): DataFrame =
-    wire
-      .withColumn("raw", resolvedPayload)
+    resolved(wire)
       .withColumn("j", from_json(col("raw"), ansGateSchema))
       .withColumn("reason", expr(ansGateReasonCase))
       .drop("j")

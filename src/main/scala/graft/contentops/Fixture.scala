@@ -155,9 +155,15 @@ object Fixture {
 
   case class WireRecord(shard: Int, seq: String, payload: Array[Byte])
 
+  private val StoreRoot = "https://fixture-store/"
+
+  /** A URL on the object store's host, which [[HttpResolver]] serves
+    * from [[objectStore]] and never over the network. */
+  private[contentops] def isStoreUrl(url: String): Boolean = url.startsWith(StoreRoot)
+
   private def urlFor(seq: Long): String =
-    if (isBroken(seq)) s"https://fixture-store/missing/$seq"
-    else s"https://fixture-store/objects/$seq"
+    if (isBroken(seq)) s"${StoreRoot}missing/$seq"
+    else s"${StoreRoot}objects/$seq"
 
   /** The alien (non-content-operation) record's seq: wire-contract-valid
     * fixed-width decimal, disjoint from every op seq (ops stay < 1000). */
@@ -177,9 +183,9 @@ object Fixture {
     alien +: real
   }
 
-  /** The pre-signed-URL object store stand-in (read directly by the
-    * resolve step locally; an HTTP client per partition in production).
-    * Broken URLs are absent by construction. */
+  /** The pre-signed-URL object store stand-in: the in-memory transport
+    * of [[HttpResolver]]'s fetch for URLs on its host. Broken URLs are
+    * absent by construction. */
   lazy val objectStore: Map[String, Array[Byte]] =
     ops.filter(o => isIndirect(o.seq) && !isBroken(o.seq))
       .map(o => urlFor(o.seq) -> gzip(envelopeJson(o).getBytes(UTF_8))).toMap

@@ -7,13 +7,20 @@ import java.time.Duration
 import java.util.concurrent.{CompletableFuture, ConcurrentHashMap}
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
-/** A3 in its production shape: resolve pre-signed-URL payload indirections
-  * with a REAL HTTP client (`/root/reference/docs/user-guide.md:17-44` —
-  * oversized documents land in S3 and the wire record carries a pre-signed
-  * URL; the consumer fetches it, gunzips, and must skip — not crash — on
-  * a failed fetch).
+/** A3, the engine's one S3-indirection resolve (the reference's
+  * `docs/user-guide.md:17-44` — oversized documents land in S3 and the
+  * wire record carries a pre-signed URL; the consumer fetches it,
+  * gunzips, and must skip — not crash — on a failed fetch). [[ContentOps.envelopeFromWire]],
+  * [[ContentOps.ansGate]] and [[resolveWithReasons]] all run it.
+  *
+  * A fetch is `url → CompletableFuture[Answer]` over one of two
+  * transports, chosen by the URL's host: the fixture's own host
+  * ([[Fixture.isStoreUrl]]) is served from [[Fixture.objectStore]] with
+  * completed futures, every other URL by a real HTTP GET. The store path
+  * never creates the client.
   *
   * Client lifecycle is the scale story: `client` is a JVM-wide lazy
   * singleton, so on a 1000-executor cluster each executor JVM opens ONE
@@ -23,8 +30,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
   * even per partition.
   *
   * The stage waits on the network, not the CPU, so each task keeps a
-  * window of up to [[InFlight]] GETs outstanding (`sendAsync`) and emits
-  * rows in input order as the head of the window answers: a task
+  * window of up to [[InFlight]] fetches outstanding (`sendAsync`) and
+  * emits rows in input order as the head of the window answers: a task
   * resolves ~InFlight rows per round-trip instead of one. Gunzip and the
   * `corrupt` check run on the task thread when a row is emitted, so the
   * CPU work stays in Spark's task time; at most InFlight bodies per task
@@ -32,19 +39,15 @@ import org.apache.spark.sql.{DataFrame, Dataset}
   * GETs are still outstanding when a task ends early or is killed.
   *
   * Error tolerance (A19): a non-200 status, a connect/read timeout, a DNS
-  * failure, or a corrupt (non-gzip) body all resolve to null, and the
-  * caller's `filter(raw.isNotNull)` skips the record — the exact
-  * log-and-skip contract of the reference loop (user-guide.md:34-39).
-  * ContentOpsSpec drives this against an in-JVM HTTP fixture server:
-  * 200+gzip, 404, timeout, and corrupt-body paths, proving the output
-  * equal to the fixture's expected envelope JSON on the same wire fixture.
+  * failure, a store miss, or a corrupt (non-gzip) body all resolve to a
+  * null `raw` with its `skip_reason`, and the caller skips the record —
+  * the log-and-skip contract of the reference loop (user-guide.md:34-39).
   */
 object HttpResolver {
 
-  /** GETs each task keeps outstanding. Not a parameter: at 25 ms per GET
-    * on 4 cores a window of 8 resolved ~300 rows/s, 32 ~540 and 64 or
-    * 128 no more than ~590, where Spark's per-job overhead, not the
-    * window, bounds a pass. It also bounds memory at 32 bodies a task. */
+  /** Fetches each task keeps outstanding. Not a parameter: it bounds
+    * memory at 32 bodies a task. At 25 ms per GET on 4 cores a window of
+    * 8 resolved ~300 rows/s and 32 ~540. */
   val InFlight = 32
 
   /** One pooled client per JVM (per executor, in cluster terms). Objects
@@ -54,9 +57,9 @@ object HttpResolver {
     .followRedirects(HttpClient.Redirect.NORMAL)
     .build()
 
-  /** A row once its GET has answered: `Left((raw, skip_reason))` is final
-    * (an inline or null payload, or a skip class), `Right(body)` is a 200
-    * body still to gunzip on the task thread. */
+  /** A row once its fetch has answered: `Left((raw, skip_reason))` is
+    * final (an inline or null payload, or a skip class), `Right(body)` is
+    * a 200 body still to gunzip on the task thread. */
   private type Answer = Either[(String, String), Array[Byte]]
 
   private def done(raw: String, reason: String): CompletableFuture[Answer] =
@@ -64,25 +67,35 @@ object HttpResolver {
 
   private val Transient: Answer = Left((null, "transient"))
 
+  /** A4: a payload is a pointer to fetch when it is an `http://` or
+    * `https://` URL (the reference tests `payload[0:5] == 'https'`; no
+    * inline JSON record starts with either); anything else is the record
+    * itself. */
+  private[contentops] def isPointer(payload: String): Boolean =
+    payload.startsWith("https://") || payload.startsWith("http://")
+
   /** One partition's resolve: an iterator over `(shard, seq, raw,
-    * skip_reason)` that keeps up to [[InFlight]] rows of `it` in flight. */
-  private final class Window(it: Iterator[(Int, String, String)], timeoutMs: Long,
-      isUrl: String => Boolean) extends Iterator[(Int, String, String, String)] {
-    private val pending = new java.util.ArrayDeque[(Int, String, CompletableFuture[Answer])]()
+    * skip_reason)` rows that keeps up to [[InFlight]] rows of `it` in
+    * flight, and cancels what is still outstanding when its task ends. */
+  private final class Window(it: Iterator[Row], timeoutMs: Long, isUrl: String => Boolean)
+      extends Iterator[Row] {
+    private val pending = new java.util.ArrayDeque[(Row, CompletableFuture[Answer])]()
     private val live = ConcurrentHashMap.newKeySet[CompletableFuture[_]]()
     @volatile private var closed = false
+    Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => close()))
 
     def hasNext: Boolean = { fill(); !pending.isEmpty }
 
-    def next(): (Int, String, String, String) = {
+    def next(): Row = {
       fill()
-      val (shard, seq, answer) = pending.remove()
-      answer.get() match { // interruptible: a killed task stops waiting
-        case Left((raw, reason)) => (shard, seq, raw, reason)
+      val (r, answer) = pending.remove()
+      val (raw, reason) = answer.get() match { // interruptible: a killed task stops waiting
+        case Left(done) => done
         case Right(b) =>
-          try (shard, seq, new String(Fixture.gunzip(b), UTF_8), null)
-          catch { case scala.util.control.NonFatal(_) => (shard, seq, null, "corrupt") }
+          try (new String(Fixture.gunzip(b), UTF_8), null)
+          catch { case scala.util.control.NonFatal(_) => (null, "corrupt") }
       }
+      Row(r.get(0), r.get(1), raw, reason)
     }
 
     /** Cancel every outstanding GET; no retry starts after this. */
@@ -95,16 +108,20 @@ object HttpResolver {
       * partition delays every record behind it — persistent failure
       * belongs in the skip metrics, not in retries. */
     private def fill(): Unit = while (pending.size < InFlight && it.hasNext) {
-      val (shard, seq, p) = it.next()
-      pending.add((shard, seq,
+      val r = it.next()
+      val p = r.getString(2)
+      pending.add((r,
         if (p == null) done(null, "null_payload")
         else if (isUrl(p))
           get(p).thenCompose(a => if (a == Transient) get(p) else CompletableFuture.completedFuture(a))
         else done(p, null)))
     }
 
-    /** One GET, classified. Pre-signed URLs make status classes MEAN
-      * something (user-guide.md:17 — the URLs are time-limited):
+    /** One fetch, over the transport the URL's host selects: the
+      * fixture's object store answers at once, a 200 body or `missing`;
+      * any other URL is one GET, classified. Pre-signed URLs make status
+      * classes MEAN something (user-guide.md:17 — the URLs are
+      * time-limited):
       *  - 200 → body;
       *  - 403 → `expired`: the signature lapsed — retrying the SAME URL
       *    cannot succeed (only re-signing upstream can), so never retried,
@@ -113,7 +130,9 @@ object HttpResolver {
       *  - 5xx / timeout / transport → `transient`: the only class a
       *    bounded retry can rescue. */
     private def get(url: String): CompletableFuture[Answer] =
-      if (closed) done(null, "transient")
+      if (Fixture.isStoreUrl(url))
+        CompletableFuture.completedFuture(Fixture.objectStore.get(url).toRight((null, "missing")))
+      else if (closed) done(null, "transient")
       else try {
         val req = HttpRequest.newBuilder(URI.create(url))
           .timeout(Duration.ofMillis(timeoutMs)).GET().build()
@@ -132,34 +151,31 @@ object HttpResolver {
       } catch { case scala.util.control.NonFatal(_) => done(null, "transient") }
   }
 
-  /** A4: a payload is a pointer to fetch when it starts with `https`
-    * (the reference's `payload[0:5] == 'https'` branch); anything else is
-    * the record itself. The fixture-store resolve in [[ContentOps]] reads
-    * the same test. */
-  private[contentops] def isPointer(payload: String): Boolean = payload.startsWith("https")
+  /** The engine's partition function, defined once, so every plan that
+    * resolves the same input is equal to every other and the
+    * CacheManager shares what is cached on it. */
+  private val engineWindow: Iterator[Row] => Iterator[Row] = new Window(_, 10000L, isPointer)
 
-  /** The resolve stage: decoded payload strings `(shard, seq, payload)` →
-    * `(shard, seq, raw, skip_reason)` where `raw` is the envelope JSON —
-    * fetched and gunzipped when the payload is a pointer (`isUrl`),
+  /** The resolve stage: a decoded frame `(shard, seq, payload)` →
+    * `(shard, seq, raw, skip_reason)`, rows in input order within each
+    * partition, `shard` and `seq` as the input has them. `raw` is the
+    * record JSON — fetched and gunzipped when the payload is a pointer,
     * passed through when inline, null (⇒ caller skips) when the fetch or
-    * decode fails. `skip_reason` (null on success) lets the A19
-    * observe() telemetry count the classes apart without a second scan:
-    * `expired` (403 — re-sign upstream) vs `missing` (other 4xx) vs
-    * `transient` (5xx/timeout, already retried once) vs `corrupt` (200
-    * but not gzip) vs `null_payload`. Rows keep their input order within
-    * each partition.
-    *
-    * `isUrl` is a parameter only so tests can point at a plain-http
-    * in-JVM fixture server; production uses the default, [[isPointer]]. */
+    * decode fails. `skip_reason` (null on success) names the class:
+    * `expired` (403 — re-sign upstream) vs `missing` (other 4xx, or not
+    * in the fixture store) vs `transient` (5xx/timeout, already retried
+    * once) vs `corrupt` (200 but not gzip) vs `null_payload`. */
+  private[contentops] def resolve(decoded: DataFrame,
+      window: Iterator[Row] => Iterator[Row] = engineWindow): DataFrame =
+    decoded.mapPartitions(window)(Encoders.row(StructType(decoded.schema.take(2) ++
+      Seq(StructField("raw", StringType), StructField("skip_reason", StringType)))))
+
+  /** [[resolve]] over decoded payload strings. `isUrl` lets a caller pick
+    * which payloads to fetch; the engine's own stage uses the default,
+    * [[isPointer]]. */
   def resolveWithReasons(
       decoded: Dataset[(Int, String, String)],
       timeoutMs: Long = 10000L,
-      isUrl: String => Boolean = isPointer): DataFrame = {
-    import decoded.sparkSession.implicits._
-    decoded.mapPartitions { it =>
-      val window = new Window(it, timeoutMs, isUrl)
-      Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => window.close()))
-      window
-    }.toDF("shard", "seq", "raw", "skip_reason")
-  }
+      isUrl: String => Boolean = isPointer): DataFrame =
+    resolve(decoded.toDF("shard", "seq", "payload"), new Window(_, timeoutMs, isUrl))
 }

@@ -41,12 +41,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * }}}
   *
   * Downstream of this trait everything is identical: gzip_decode →
-  * indirection resolve (per-partition HTTP client in production — a UDF
-  * over the static fixture object store here) → from_json → keyed
-  * operators. At 100 TB
-  * the resolve stage is the only network-bound operator; it runs
-  * mapPartitions with a pooled client so connection setup amortizes per
-  * partition, mirroring the reference's per-shard consumer loop.
+  * indirection resolve (`HttpResolver`'s window of fetches: HTTP GETs on
+  * a pooled client, or the fixture's object store for the fixture's own
+  * URLs) → from_json → keyed operators. At 100 TB the resolve stage is
+  * the only network-bound operator; it runs mapPartitions over one pooled
+  * client per executor, so connection setup amortizes across the
+  * executor's lifetime, mirroring the reference's per-shard consumer
+  * loop.
   */
 trait WireSource {
   def wireRecords(spark: SparkSession): DataFrame

@@ -235,20 +235,77 @@ class ContentOpsSpec extends SparkSpec {
   test("observe(): ingest drop metrics surface without a second scan (A19 observability)") {
     // the reference prints-and-continues on failed fetches; the engine's
     // equivalent telemetry is an observe() on the ingest frame — metrics
-    // ride the same pass, no extra action. The column is the engine's own
-    // A2 + A3 resolve, the one envelopeFromWire parses.
+    // ride the same pass, no extra action. The frame is the engine's own
+    // A2 + A3 stage, the one envelopeFromWire parses, as ansGate exposes
+    // it with each skip's class.
     import spark.implicits._
     val obs = org.apache.spark.sql.Observation("ingest")
-    val observed = spark.createDataset(Fixture.wireRecords).toDF()
-      .withColumn("raw", ContentOps.resolvedPayload)
+    ContentOps.ansGate(spark, spark.createDataset(Fixture.wireRecords).toDF())
       .observe(obs,
         count(lit(1)).as("n_records"),
-        count(when(col("raw").isNull, 1)).as("n_dropped"))
+        count(when(col("raw").isNull, 1)).as("n_dropped"),
+        count(when(col("skip_reason") === "missing", 1)).as("n_missing"))
       .filter(col("raw").isNotNull)
-    observed.count()
+      .count()
     val metrics = obs.get
     assert(metrics("n_records") === Fixture.wireRecords.size.toLong)
     assert(metrics("n_dropped") === Fixture.ops.count(Fixture.isLost).toLong)
+    assert(metrics("n_missing") === Fixture.ops.count(Fixture.isLost).toLong)
+  }
+
+  /** Seven fixture ops on a parquet wire frame (a scan, so
+    * ConvertToLocalRelation cannot fold the plan away) whose indirections
+    * are plain-http URLs into a loopback server, none of them in
+    * `Fixture.objectStore`: the server serves five, answers the sixth with
+    * 404, and the seventh is inline. Runs `f` on the frame and the ops by
+    * role (served, 404, inline). */
+  private def withLoopbackWire(
+      f: (org.apache.spark.sql.DataFrame, Seq[Fixture.Op], Fixture.Op, Fixture.Op) => Unit): Unit = {
+    import com.sun.net.httpserver.{HttpExchange, HttpServer}
+    import spark.implicits._
+    val ops = Fixture.expected.take(7)
+    val (served, gone, inline) = (ops.take(5), ops(5), ops(6))
+    def gz(text: String) = Fixture.gzip(text.getBytes("UTF-8"))
+    val objects = served.map(o => s"/objects/${o.seq}" -> gz(Fixture.envelopeJson(o))).toMap
+    val server = HttpServer.create(new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    server.createContext("/", (ex: HttpExchange) => try {
+      objects.get(ex.getRequestURI.getPath) match {
+        case Some(b) => ex.sendResponseHeaders(200, b.length.toLong); ex.getResponseBody.write(b)
+        case None => ex.sendResponseHeaders(404, -1L)
+      }
+    } finally ex.close())
+    val handlers = java.util.concurrent.Executors.newFixedThreadPool(2)
+    server.setExecutor(handlers)
+    server.start()
+    try {
+      val base = s"http://127.0.0.1:${server.getAddress.getPort}"
+      val dir = java.nio.file.Files.createTempDirectory("graft-loopback").toString
+      (served.map(o => (o.shard, Fixture.seqStr(o.seq), gz(s"$base/objects/${o.seq}"))) ++ Seq(
+        (gone.shard, Fixture.seqStr(gone.seq), gz(s"$base/objects/gone-${gone.seq}")),
+        (inline.shard, Fixture.seqStr(inline.seq), gz(Fixture.envelopeJson(inline)))))
+        .toDF("shard", "seq", "payload").write.parquet(s"$dir/wire")
+      f(spark.read.parquet(s"$dir/wire"), served, gone, inline)
+    } finally { server.stop(0); handlers.shutdownNow() }
+  }
+
+  test("production path: envelopeFromWire fetches indirections the fixture store does not hold") {
+    withLoopbackWire { (wire, served, _, inline) =>
+      val seqs = (served :+ inline).map(o => Fixture.seqStr(o.seq))
+      val got = ContentOps.envelopeFromWire(spark, wire)
+      val want = ContentOps.envelopeWithBody(spark).filter(col("seq").isin(seqs: _*))
+      assert(got.select("seq").collect().map(_.getString(0)).sorted.toSeq === seqs.sorted)
+      assert(got.exceptAll(want).count() === 0 && want.exceptAll(got).count() === 0)
+    }
+  }
+
+  test("ansGate runs the same resolve: a served indirection is ok, a 404 is fetch_failed") {
+    withLoopbackWire { (wire, served, gone, inline) =>
+      val got = ContentOps.ansGate(spark, wire).select("seq", "skip_reason", "reason").collect()
+        .map(r => r.getString(0) -> ((Option(r.getString(1)), r.getString(2)))).toMap
+      val want = (served :+ inline).map(o => Fixture.seqStr(o.seq) -> ((None, "ok"))).toMap +
+        (Fixture.seqStr(gone.seq) -> ((Some("missing"), "fetch_failed")))
+      assert(got === want)
+    }
   }
 
   test("q161 body diff: planted adds/removes/changes classify exactly") {
@@ -547,24 +604,34 @@ class ContentOpsSpec extends SparkSpec {
 
   test("one pass per wire record: the ingest and gate plans decode once, parse once, look up no path") {
     import spark.implicits._
-    import org.apache.spark.sql.catalyst.expressions.{Expression, GetJsonObject, JsonToStructs}
+    import org.apache.spark.sql.catalyst.expressions.{Expression, GetJsonObject, JsonToStructs, ScalaUDF}
+    import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     // a parquet scan, so ConvertToLocalRelation cannot fold the plan away
     val dir = java.nio.file.Files.createTempDirectory("graft-onepass").toString
     spark.createDataset(Fixture.auditWireRecords).write.parquet(s"$dir/wire")
     val wire = spark.read.parquet(s"$dir/wire")
-    def counts(df: org.apache.spark.sql.DataFrame): (Int, Int, Int) = {
+    def exprs(nodes: Seq[SparkPlan]): Seq[Expression] =
+      nodes.flatMap(_.expressions).flatMap(_.collect { case e => e })
+    // the operators one whole-stage codegen stage compiles
+    def stage(p: SparkPlan): Seq[SparkPlan] =
+      p +: (p match { case _: InputAdapter => Nil; case _ => p.children.flatMap(stage) })
+    def counts(df: org.apache.spark.sql.DataFrame): (Int, Int, Int, Int, Int) = {
       val plan = df.queryExecution.executedPlan match {
         case a: AdaptiveSparkPlanExec => a.executedPlan
         case p => p
       }
-      val exprs: Seq[Expression] = plan.flatMap(_.expressions).flatMap(_.collect { case e => e })
-      (exprs.count(_.isInstanceOf[graft.functions.GzipDecode]),
-        exprs.count(_.isInstanceOf[JsonToStructs]),
-        exprs.count(_.isInstanceOf[GetJsonObject]))
+      val all = exprs(plan.collect { case p => p })
+      val compiled = exprs(plan.collect { case w: WholeStageCodegenExec => stage(w.child) }.flatten)
+      (all.count(_.isInstanceOf[graft.functions.GzipDecode]),
+        all.count(_.isInstanceOf[JsonToStructs]),
+        all.count(_.isInstanceOf[GetJsonObject]),
+        all.count(_.isInstanceOf[ScalaUDF]),
+        compiled.count(_.isInstanceOf[graft.functions.GzipDecode]))
     }
-    assert(counts(ContentOps.envelopeFromWire(spark, wire)) === ((1, 1, 0)))
-    assert(counts(ContentOps.ansGate(spark, wire)) === ((1, 1, 0)))
+    // one decode, compiled; one parse; no path lookup; no UDF
+    assert(counts(ContentOps.envelopeFromWire(spark, wire)) === ((1, 1, 0, 0, 1)))
+    assert(counts(ContentOps.ansGate(spark, wire)) === ((1, 1, 0, 0, 1)))
   }
 
   test("every envelope build, in any session, reads the first build's cache") {
